@@ -896,6 +896,24 @@ def _pq_adc_sum():
     return s
 
 
+def _adc_top3(scored: DataFrame) -> DataFrame:
+    """Top-3 candidates per query by ADC distance, ties by neighbor id.
+    ``scored`` carries query_id, vec_id, the codes c0..c{M-1} and the
+    query's ``lut`` map. A code with no LUT entry scores a null
+    distance, which would sort FIRST in the window; such candidates are
+    dropped before ranking, as the former per-subspace inner joins
+    dropped them."""
+    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
+    return (scored.select("query_id",
+                          F.col("vec_id").alias("neighbor_id"),
+                          (F.round(_pq_adc_sum(), 6) + 0.0)
+                          .alias("adc_d2"))
+            .where(F.col("adc_d2").isNotNull())
+            .withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= 3)
+            .select("query_id", "neighbor_id", "adc_d2", "rnk"))
+
+
 def _pq_oracle() -> str:
     subs = []
     for m in range(PQ_M):
@@ -1023,13 +1041,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 queries.select("query_id")))
               .where(F.col("vec_id") != F.col("query_id"))
               .join(F.broadcast(_pq_query_lut(queries, cb)), "query_id"))
-    adc = (F.round(_pq_adc_sum(), 6) + 0.0).alias("adc_d2")
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (scored.select("query_id",
-                          F.col("vec_id").alias("neighbor_id"), adc)
-            .withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= 3)
-            .select("query_id", "neighbor_id", "adc_d2", "rnk"))
+    return _adc_top3(scored)
 
 
 def _kmeans_oracle() -> str:
@@ -1312,14 +1324,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                          (F.col("cluster") == F.col("probe"))
                          & (F.col("vec_id") != F.col("query_id")))
               .join(F.broadcast(_pq_query_lut(queries, cb)), "query_id"))
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (scored.select("query_id",
-                          F.col("vec_id").alias("neighbor_id"),
-                          (F.round(_pq_adc_sum(), 6) + 0.0)
-                          .alias("adc_d2"))
-            .withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= 3)
-            .select("query_id", "neighbor_id", "adc_d2", "rnk"))
+    return _adc_top3(scored)
 
 
 # ------------------------------------------- JL random projection

@@ -63,7 +63,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-from .dis_log import DisLog, sanitize_txn, segment_name
+from .dis_log import DisLog, commit_assigned, sanitize_txn, segment_name
 from .offsets import (
     EARLIEST, LATEST, OffsetRange,
     offset_ranges_from_json, partition_offsets_from_json, resolve_sentinels,
@@ -786,15 +786,15 @@ class DisWriter(DataSourceWriter):
       ``segmentRows``); commit() validates offset metadata and *renames*
       — zero data bytes ever touch the driver.
     - **assign-at-commit (producer) mode** — no ``offset`` column: tasks
-      stage per-partition files; commit() reserves offset ranges from the
-      log tail and rewrites ONE staged file at a time (driver memory is
-      bounded by a single task's output for one partition, never the
-      batch). Rows lacking a ``partition`` value are routed by portable
-      key-hash % num_partitions (DISSink.scala:27-34 key-routing
-      semantics).
+      stage per-partition files; commit() hands them, ONE staged file at
+      a time, to ``dis_log.commit_assigned``, which reserves offset
+      ranges from the log tail (driver memory is bounded by a single
+      task's output for one partition, never the batch). Rows lacking a
+      ``partition`` value are routed by portable key-hash %
+      num_partitions (DISSink.scala:27-34 key-routing semantics).
 
-    Exactly-once: pass option ``txn`` (the streaming sink uses
-    ``<query>_b<batchId>``). Segments are tagged with the txn in their
+    Exactly-once: pass option ``txn`` (the streaming writer below uses
+    ``<txnPrefix>_b<batchId>``). Segments are tagged with the txn in their
     filename; the txn is recorded in the log's ledger (atomic rename)
     only after every segment is in place. On replay, a committed txn is
     skipped wholesale; a crashed, uncommitted txn's tagged segments —
@@ -898,14 +898,13 @@ class DisWriter(DataSourceWriter):
         try:
             if self.has_offsets:
                 self._commit_explicit(staged)
+                if self.txn:
+                    self.log.record_txn(self.txn)
             else:
-                self._commit_assign(staged)
-        except Exception:
+                commit_assigned(self.log, self._staged_tables(staged),
+                                self.txn, self.segment_rows)
+        finally:
             self._cleanup(messages)
-            raise
-        if self.txn:
-            self.log.record_txn(self.txn)
-        self._cleanup(messages)
 
     def _commit_explicit(self, staged) -> None:
         """Metadata validation + renames only — no data I/O on the driver."""
@@ -940,36 +939,17 @@ class DisWriter(DataSourceWriter):
                                  self.txn))
                 os.replace(s.path, final)
 
-    def _commit_assign(self, staged) -> None:
-        """Reserve offset ranges from the log tail, then rewrite staged
-        files ONE AT A TIME adding the offset column — driver memory is
+    @staticmethod
+    def _staged_tables(staged):
+        """Assign-mode staged files as ``commit_assigned`` chunks: per
+        partition in task order, read ONE AT A TIME — driver memory is
         bounded by a single staged file, never the batch."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from .dis_log import _write_segment
-
-        latest = self.log.latest_offsets()
         for part in sorted(staged):
-            entries = sorted(staged[part], key=lambda e: (e[0], e[1].path))
-            base = latest.get(part, 0)
-            for _, seg in entries:
-                if seg.rows == 0:
-                    continue
-                table = pq.read_table(seg.path)
-                step = self.segment_rows or seg.rows
-                for lo in range(0, seg.rows, step):
-                    chunk = table.slice(lo, step)
-                    n = chunk.num_rows
-                    chunk = chunk.add_column(
-                        0, "offset",
-                        pa.array(range(base, base + n), pa.int64()))
-                    final = os.path.join(
-                        self.log._part_dir(part),
-                        segment_name(base, base + n, n, self.txn))
-                    _write_segment(chunk, final)
-                    base += n
-            latest[part] = base
+            for _, seg in sorted(staged[part], key=lambda e: (e[0], e[1].path)):
+                if seg.rows:
+                    yield part, pq.read_table(seg.path)
 
     def abort(self, messages) -> None:
         self._cleanup(messages)

@@ -29,6 +29,7 @@ import hashlib as _hashlib
 import json
 import os
 import re as _re
+import shutil
 import time
 import uuid
 
@@ -364,12 +365,23 @@ class DisLog:
         one). Only files older than ``min_age_seconds`` are removed: a
         LIVE writer's tmp exists for milliseconds, so the age gate keeps
         the sweep safe to run next to a concurrent writer. Called from
-        the writer-side entry points (create, merge_small_segments)."""
+        the writer-side entry points (create, merge_small_segments).
+
+        The same gate applies to every entry directly under
+        ``<stream>/_staging/``: the ``stage-*.parquet`` files of a
+        crashed ``format("dis")`` task or driver and the per-txn
+        directories of a crashed foreachBatch sink. A directory's age is
+        that of the newest file in it, so a sink still writing its
+        batch is left alone."""
         cutoff = time.time() - min_age_seconds
         removed = 0
         if not os.path.isdir(self.stream_dir):
             return 0
-        for dirpath, _dirnames, filenames in os.walk(self.stream_dir):
+        stage_dir = os.path.join(self.stream_dir, "_staging")
+        for dirpath, dirnames, filenames in os.walk(self.stream_dir):
+            if dirpath == stage_dir:
+                dirnames.clear()   # swept whole below, not walked
+                continue
             for name in filenames:
                 if ".tmp-" not in name:
                     continue
@@ -380,6 +392,19 @@ class DisLog:
                         removed += 1
                 except OSError:
                     pass          # racing writer finished its replace
+        for name in (os.listdir(stage_dir) if os.path.isdir(stage_dir)
+                     else ()):
+            path = os.path.join(stage_dir, name)
+            try:
+                if _newest_mtime(path) >= cutoff:
+                    continue
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                else:
+                    os.remove(path)
+                removed += 1
+            except OSError:
+                pass              # its writer committed and removed it
         return removed
 
     def _write_meta(self, payload: dict) -> None:
@@ -425,8 +450,9 @@ class DisLog:
         at append time, one segment file per partition per call. Returns
         the new latest offsets. Single-process writer by design — the log
         stands in for the DIS *service*, which owns offset assignment; Spark
-        jobs write through it via streaming/sink.py, which funnels each
-        micro-batch through this API idempotently.
+        jobs append through :func:`commit_assigned` instead (the
+        ``format("dis")`` writer and streaming/sink.py), exactly-once per
+        txn.
         """
         import pandas as pd
         import pyarrow as pa
@@ -558,6 +584,15 @@ def create_log_from_events(spark: SparkSession, events_path: str, root: str,
     return log
 
 
+def _newest_mtime(path: str) -> float:
+    """mtime of ``path``, or of the newest entry anywhere under it."""
+    newest = os.path.getmtime(path)
+    for dirpath, dirnames, filenames in os.walk(path):
+        for name in dirnames + filenames:
+            newest = max(newest, os.path.getmtime(os.path.join(dirpath, name)))
+    return newest
+
+
 def _write_segment(table, path: str) -> None:
     """Write a segment with microsecond timestamps — pandas produces
     nanosecond columns, which Spark's parquet reader rejects.
@@ -579,6 +614,45 @@ def _write_segment(table, path: str) -> None:
     tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
     pq.write_table(table.cast(pa.schema(fields)), tmp)
     os.replace(tmp, path)
+
+
+def commit_assigned(log: DisLog, chunks, txn: str | None = None,
+                    segment_rows: int = 0) -> None:
+    """Assign-at-commit append — the one copy of the producer's txn /
+    offset-assignment protocol, shared by ``DisWriter`` (``format("dis")``
+    writes) and ``DisForeachBatchSink``.
+
+    ``chunks`` yields ``(partition, table)`` pairs of (key, value,
+    timestamp) rows in commit order; it is consumed lazily, so a caller
+    that reads its staged files inside the generator bounds driver
+    memory by one staged file, never the batch. Each chunk is appended
+    at its partition's tail as txn-tagged segments (cut every
+    ``segment_rows`` rows), each written atomically; rows keep their
+    order, so a partition's offsets follow chunk order. The txn lands in
+    the ledger LAST — until then a crash leaves only tagged tail
+    segments, which ``rollback_txn`` removes before the replay. Skipping
+    a committed txn and that rollback are the caller's steps, taken
+    before this is called."""
+    import pyarrow as pa
+
+    latest = log.latest_offsets()
+    for part, table in chunks:
+        n_rows = table.num_rows
+        if n_rows == 0:
+            continue
+        base = latest.get(part, 0)
+        step = segment_rows or n_rows
+        for lo in range(0, n_rows, step):
+            chunk = table.slice(lo, step)
+            n = chunk.num_rows
+            chunk = chunk.add_column(
+                0, "offset", pa.array(range(base, base + n), pa.int64()))
+            _write_segment(chunk, os.path.join(
+                log._part_dir(part), segment_name(base, base + n, n, txn)))
+            base += n
+        latest[part] = base
+    if txn:
+        log.record_txn(txn)
 
 
 def merge_small_segments(log: DisLog, target_rows: int) -> dict[int, int]:

@@ -69,3 +69,26 @@ def test_assign_nearest_plan_has_no_window_exchange(spark, sf_dir):
         .executedPlan().toString()
     assert "Window" not in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_adc_top3_drops_candidates_with_a_missing_code(spark):
+    """A PQ code with no LUT entry scores a null ADC distance, which
+    would sort FIRST in the top-k window; the ranking drops such a
+    candidate, as the former per-subspace inner joins did."""
+    from spark_streaming_dis_plugin_spark.operators.similarity import (
+        PQ_K, PQ_M, _adc_top3)
+
+    # code c contributes distance c in every subspace: d(codes) = sum
+    lut = F.create_map(*[x for c in range(PQ_K) for x in (
+        F.lit(c), F.struct(*[F.lit(float(c)).alias(f"d{m}")
+                             for m in range(PQ_M)]))])
+    codes = {10: [0, 0, 0, PQ_K + 5],   # missing code: otherwise the best
+             11: [1, 1, 1, 1], 12: [0, 1, 0, 1], 13: [2, 2, 2, 2],
+             14: [3, 3, 3, 3]}
+    scored = (spark.createDataFrame(
+        [(0, v, *cs) for v, cs in codes.items()],
+        ["query_id", "vec_id"] + [f"c{m}" for m in range(PQ_M)])
+        .withColumn("lut", lut))
+    got = [(r["neighbor_id"], r["adc_d2"], r["rnk"])
+           for r in _adc_top3(scored).orderBy("rnk").collect()]
+    assert got == [(12, 2.0, 1), (11, 4.0, 2), (13, 8.0, 3)]

@@ -311,6 +311,85 @@ def test_writer_key_hash_routing(spark, tmp_path):
     assert again.count() == 200
     assert (again.select("partition", "key").distinct().count()
             == back.select("partition", "key").distinct().count())
+    # the foreachBatch sink routes in the plan by the same hash; both
+    # paths, with no partition column and with a null partition value
+    variants = {"nocol": df,
+                "nullcol": df.withColumn("partition", F.lit(None).cast("int"))}
+    for name, frame in variants.items():
+        for path in ("dis", "sink"):
+            dst = DL(str(tmp_path / f"route_{name}_{path}"), "rt").create(4)
+            if path == "sink":
+                DisForeachBatchSink(dst, name)(frame, 0)
+            else:
+                (frame.write.format("dis").mode("append")
+                 .option("path", dst.root).option("stream", "rt").save())
+            got = (spark.read.format("dis").option("path", dst.root)
+                   .option("stream", "rt").load()
+                   .select("partition", "key").collect())
+            assert len(got) == 100, (name, path)
+            for r in got:
+                assert r["partition"] == portable_hash_py(r["key"]) % 4, \
+                    (name, path)
+
+
+def _log_rows(log):
+    """Per partition: [(offset, key, value, timestamp)] in offset order,
+    plus the segment spans — read straight from the segment files."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for p in log.partitions():
+        rows, spans = [], []
+        for s in log.segment_infos(p):
+            t = pq.read_table(s.path)
+            assert t.column_names == ["offset", "key", "value", "timestamp"]
+            rows += list(zip(*(t.column(c).to_pylist()
+                               for c in t.column_names)))
+            spans.append((s.from_offset, s.until_offset, s.rows))
+        out[p] = (rows, spans)
+    return out
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp_ntz", "timestamp"])
+def test_sink_segments_match_dis_writer(spark, tmp_path, ts_type):
+    """Fidelity: for the same batch, the foreachBatch sink (Spark parquet
+    staging + driver commit) writes exactly the segments a
+    ``format("dis")`` write does — key, value, timestamp, per-partition
+    row order and segment spans — for an NTZ and an LTZ timestamp
+    column under a non-UTC session timezone, with rows across several
+    tasks, null partitions (key-hash routed), a null key and a null
+    timestamp."""
+    from spark_streaming_dis_plugin_spark.sources.dis_log import DisLog as DL
+
+    spark.dataSource.register(DisDataSource)
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        # 2024-03-10 00:00 UTC onwards in 7-minute steps: the rows span
+        # New York's spring-forward gap
+        ts = F.timestamp_micros(F.lit(1710028800000000)
+                                + F.col("id") * 420000000)
+        batch = (spark.range(0, 120, 1, 3)
+                 .select(F.when(F.col("id") % 5 == 0, F.lit(None))
+                         .otherwise(F.col("id") % 3).cast("int")
+                         .alias("partition"),
+                         F.when(F.col("id") == 7, F.lit(None))
+                         .otherwise(F.format_string("k%d", F.col("id") % 11))
+                         .alias("key"),
+                         F.format_string("v%d", "id").alias("value"),
+                         F.when(F.col("id") == 9, F.lit(None))
+                         .otherwise(ts).cast(ts_type).alias("timestamp")))
+        via_dis = DL(str(tmp_path / "dis"), "f").create(3)
+        (batch.write.format("dis").mode("append")
+         .option("path", via_dis.root).option("stream", "f").save())
+        via_sink = DL(str(tmp_path / "sink"), "f").create(3)
+        DisForeachBatchSink(via_sink, "fq")(batch, 0)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    want, got = _log_rows(via_dis), _log_rows(via_sink)
+    assert sum(len(rows) for rows, _ in want.values()) == 120
+    assert all(len(spans) > 1 for _, spans in want.values())  # >1 task
+    assert got == want
 
 
 def test_stateful_running_totals(spark, sf_dir, log, tmp_path):

@@ -210,3 +210,32 @@ def test_sweep_stale_tmps_removes_only_old_orphans(tmp_path):
     os.utime(fresh, (past, past))
     DisLog(str(tmp_path), "sweepy").create(2)
     assert not os.path.exists(fresh)
+
+
+def test_sweep_reclaims_stale_staging_entries(tmp_path):
+    """Staged data orphaned by a crashed writer — a ``format("dis")``
+    task's ``stage-*.parquet`` file or a foreachBatch sink's per-txn
+    staging directory — is reclaimed by create() once older than the
+    age gate; a fresh entry (a writer still staging) is kept."""
+    log = DisLog(str(tmp_path), "staged").create(2)
+    stage = os.path.join(log.stream_dir, "_staging")
+    os.makedirs(os.path.join(stage, "q_b3-deadbeef", "_temporary"))
+    os.makedirs(os.path.join(stage, "q_b4-cafebabe"))
+    old_file = os.path.join(stage, "stage-0-deadbeef.parquet")
+    old_dir_file = os.path.join(stage, "q_b3-deadbeef", "part-00000.parquet")
+    fresh_file = os.path.join(stage, "stage-1-cafebabe.parquet")
+    fresh_dir_file = os.path.join(stage, "q_b4-cafebabe", "part-00000.parquet")
+    for p in (old_file, old_dir_file, fresh_file, fresh_dir_file):
+        with open(p, "w") as f:
+            f.write("staged bytes")
+    past = time.time() - 3600
+    for p in (old_file, old_dir_file,
+              os.path.join(stage, "q_b3-deadbeef", "_temporary"),
+              os.path.join(stage, "q_b3-deadbeef"),
+              os.path.join(stage, "q_b4-cafebabe")):
+        os.utime(p, (past, past))
+
+    DisLog(str(tmp_path), "staged").create(2)
+    assert sorted(os.listdir(stage)) == ["q_b4-cafebabe",
+                                         "stage-1-cafebabe.parquet"]
+    assert os.path.exists(fresh_dir_file)   # newest file inside is fresh
