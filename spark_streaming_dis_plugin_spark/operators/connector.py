@@ -5271,13 +5271,14 @@ def dis_pattern_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ConsumerStrategy.scala:132-171's periodic re-match, streaming side):
     a live query subscribed by REGEX ('events.*') is mid-consumption
     when a brand-new matching stream is CREATED and filled; the
-    per-trigger re-match in DisPatternStreamReader.latestOffset() must
-    admit it at offset 0 and deliver every record of BOTH streams
-    exactly once — the batch union over the two streams is the oracle.
-    Two-phase protocol as in dis_partition_add_streamed: the query's
-    first progress event proves consumption started before the second
-    stream existed, so plan-time matching alone (the batch
-    DisMultiStreamReader's semantics, the r8 'partial') cannot pass."""
+    per-trigger re-match of the pattern subscription in
+    DisStreamReader.latestOffset() must admit it at its earliest offset
+    and deliver every record of BOTH streams exactly once — the batch
+    union over the two streams is the oracle. Two-phase protocol as in
+    dis_partition_add_streamed: the query's first progress event proves
+    consumption started before the second stream existed, so plan-time
+    matching alone (the batch reader's semantics, the r8 'partial')
+    cannot pass."""
     import shutil
     import time as _time
     import uuid

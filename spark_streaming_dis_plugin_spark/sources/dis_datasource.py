@@ -7,6 +7,7 @@ we implement only the source hooks, Spark owns the loop:
 
   reference (DStream)                         rebuild (this file)
   ---------------------------------           ------------------------------
+  ConsumerStrategy (Subscribe/Pattern)        Subscription
   start() + ConsumerStrategy seek             initialOffset()
   latestOffsets() + clamp()                   latestOffset()  (rate-limited)
   compute(validTime) -> DISRDD ranges         partitions(start, end)
@@ -14,6 +15,8 @@ we implement only the source hooks, Spark owns the loop:
   commitAll() / checkpointData                commit(end) + Spark offset log
   StreamInputInfo reporting                   StreamingQueryProgress (free)
 
+As in the reference, there is one batch reader and one streaming reader;
+the subscription only decides which streams' partitions are in the set.
 Batch (createRDD) maps onto the batch reader with ``offsetRanges`` /
 ``startingOffsets`` / ``endingOffsets`` options; the producer sink maps
 onto the writer, with offset assignment serialized through the log's
@@ -25,9 +28,17 @@ backlog parallelizes across executors.
 
 Options:
   path / stream        log root directory / stream name
+  subscribePattern     regex over the stream names under ``path`` (instead
+                       of ``stream``); re-matched on every trigger
   startingOffsets      "earliest" | "latest" | {"stream":{"0":23}} JSON
+  startingTimestamp    start at the first record at/after this time
   endingOffsets        "latest" | JSON (batch only)
-  offsetRanges         {"0":[from,until]} JSON (batch only; sentinels ok)
+  endingTimestamp      end before the first record at/after this time
+                       (batch only)
+  offsetRanges         {"0":[from,until]} JSON (batch only; sentinels ok;
+                       applied to every subscribed stream)
+  assign               {"stream":[0,1]} JSON — a fixed partition set
+                       (streaming only)
   maxOffsetsPerTrigger total records per micro-batch, split across
                        partitions proportionally to lag (rate.py)
   minOffsetsPerTrigger hold a trigger until this many records are
@@ -38,6 +49,8 @@ Options:
   backpressureEnabled  PID processing-rate estimator feeds the split
                        (≅ spark.streaming.backpressure.enabled)
   backpressureInitialRate / backpressureMinRate  PID seeding/floor
+  failOnDataLoss       fail (default) or skip ahead when retention
+                       expired a planned range
   txn                  (write) transaction tag — exactly-once idempotent
                        append keyed by this tag (see DisWriter)
   segmentRows          (write) cut segment files every N rows
@@ -63,10 +76,11 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from .dis_batch import check_consecutive, check_data_loss, resolve_ranges
 from .dis_log import DisLog, commit_assigned, sanitize_txn, segment_name
 from .offsets import (
     EARLIEST, LATEST, OffsetRange,
-    offset_ranges_from_json, partition_offsets_from_json, resolve_sentinels,
+    offset_ranges_from_json, partition_offsets_from_json, partitions_from_json,
 )
 from .pid import PIDRateEstimator
 from .rate import clamp, max_messages_per_partition
@@ -201,21 +215,16 @@ class DisDataSource(DataSource):
             raise ValueError("option 'path' (log root) is required")
         return DisLog(root, stream)
 
-    def reader(self, schema: StructType):
-        if "subscribepattern" in self.options:
-            root = self.options.get("path") or self.options.get("root")
-            return DisMultiStreamReader(root,
-                                        self.options["subscribepattern"])
-        return DisBatchReader(self._log(), self.options)
+    def _subscription(self) -> "Subscription":
+        log = self._log()
+        return Subscription(log.root, log.stream,
+                            self.options.get("subscribepattern"))
 
-    def streamReader(self, schema: StructType) -> "DataSourceStreamReader":
-        if "subscribepattern" in self.options:
-            root = self.options.get("path") or self.options.get("root")
-            if not root:
-                raise ValueError("option 'path' (log root) is required")
-            return DisPatternStreamReader(
-                root, self.options["subscribepattern"], self.options)
-        return DisStreamReader(self._log(), self.options)
+    def reader(self, schema: StructType) -> "DisBatchReader":
+        return DisBatchReader(self._subscription(), self.options)
+
+    def streamReader(self, schema: StructType) -> "DisStreamReader":
+        return DisStreamReader(self._subscription(), self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> "DisWriter":
         if overwrite:
@@ -230,54 +239,147 @@ class DisDataSource(DataSource):
                                schema.fieldNames())
 
 
+# ------------------------------------------------------------ subscription
+
+class Subscription:
+    """Which streams a reader covers ≅ the reference's ConsumerStrategy
+    (ConsumerStrategy.scala:74-213): the strategy only decides which
+    partitions are in the set; the readers are the same either way.
+
+    - **named** — one stream (``Subscribe``). ``logs()`` never lists the
+      log root, so the per-trigger cost is the stream's own listing.
+    - **pattern** — every stream under the root whose name fullmatches a
+      regex (``SubscribePattern``, :132-171). ``logs()`` re-lists the root
+      on every call, so a stream created mid-job is picked up on the next
+      trigger and a deleted one drops out of the plan.
+
+    Readers key every position by ``(stream, partition)``. The offsets
+    JSON that Spark stores keeps one key per partition: ``"<p>"`` for a
+    named stream (the reference's currentOffsets map,
+    DirectDISInputDStream.scala:84), ``"<stream>/<p>"`` for a pattern.
+    """
+
+    def __init__(self, root: str, stream: str = "events",
+                 pattern: str | None = None):
+        import re
+
+        self.root = root
+        self.rx = re.compile(pattern) if pattern is not None else None
+        self.log = DisLog(root, stream) if self.rx is None else None
+
+    def logs(self) -> list[DisLog]:
+        if self.rx is None:
+            return [self.log]
+        return [log for name in sorted(os.listdir(self.root))
+                if self.rx.fullmatch(name)
+                and (log := DisLog(self.root, name)).exists()]
+
+    def log_of(self, stream: str) -> DisLog:
+        return self.log if self.rx is None else DisLog(self.root, stream)
+
+    def dumps(self, offsets: dict[tuple[str, int], int]) -> dict[str, int]:
+        if self.rx is None:
+            return {str(p): o for (_, p), o in offsets.items()}
+        return {f"{s}/{p}": o for (s, p), o in offsets.items()}
+
+    def loads(self, offsets: dict) -> dict[tuple[str, int], int]:
+        out = {}
+        for k, o in offsets.items():
+            s, _, p = k.rpartition("/")     # a named key has no "<stream>/"
+            out[(s or self.log.stream, int(p))] = int(o)
+        return out
+
+
+def _as_subscription(source: "Subscription | DisLog") -> Subscription:
+    if isinstance(source, DisLog):
+        return Subscription(source.root, source.stream)
+    return source
+
+
+def _flag(options, name: str, default: str = "false") -> bool:
+    return str(options.get(name, default)).lower() == "true"
+
+
+def _boundary(log: DisLog, options, name: str,
+              sentinel: int) -> dict[int, int]:
+    """Resolved per-partition ``starting``/``ending`` boundary of ``log``.
+
+    ``<name>Timestamp`` wins: Kafka-parity offsetsForTimes through
+    parquet-footer pruning (DisLog.offsets_for_time) — a partition with no
+    record at or after the time resolves to its latest offset, which is
+    an empty read for a start and read-to-tail for an end, both Kafka's
+    conventions. Otherwise ``<name>Offsets``: "earliest" | "latest" |
+    ``{"stream": {"0": n}}`` JSON (-1/-2 sentinels allowed), a partition
+    the JSON does not name taking ``sentinel``."""
+    ts = options.get(f"{name}timestamp")
+    if ts is not None:
+        return log.offsets_for_time(ts)
+    raw = options.get(f"{name}offsets",
+                      "earliest" if sentinel == EARLIEST else "latest")
+    if raw == "earliest":
+        return log.earliest_offsets()
+    if raw == "latest":
+        return log.latest_offsets()
+    given = {p: o for (s, p), o in partition_offsets_from_json(raw).items()
+             if s == log.stream}
+    earliest, latest = log.earliest_offsets(), log.latest_offsets()
+    out = {}
+    for p in earliest:
+        o = given.get(p, sentinel)
+        out[p] = latest[p] if o == LATEST else earliest[p] if o == EARLIEST \
+            else o
+    return out
+
+
+def _checked_partitions(sub: Subscription, ranges: list[OffsetRange],
+                        fail_on_data_loss: bool,
+                        allow_gaps: bool) -> list[RangePartition]:
+    """Gate then plan ``ranges``, one stream at a time: failOnDataLoss
+    (check_data_loss) and the compacted-log gate (check_consecutive,
+    DISRDD.scala:74-75) run for every read, batch or streaming, named
+    or pattern."""
+    by_stream: dict[str, list[OffsetRange]] = {}
+    for r in ranges:
+        by_stream.setdefault(r.stream, []).append(r)
+    planned: list[RangePartition] = []
+    for stream, rs in by_stream.items():
+        log = sub.log_of(stream)
+        rs = check_data_loss(log, rs, fail_on_data_loss)
+        check_consecutive(log, rs, allow_gaps)
+        planned.extend(_plan_partitions(log, rs))
+    return planned
+
+
 # ------------------------------------------------------------------- batch
 
 class DisBatchReader(DataSourceReader):
-    """Bounded scan — the createRDD path (DISUtils.scala:240-303)."""
+    """Bounded scan over a subscription — the createRDD path
+    (DISUtils.scala:240-303). Boundaries and gates resolve once, at
+    construction (plan time), for every subscribed stream; a pattern that
+    matches no stream is an error."""
 
-    def __init__(self, log: DisLog, options):
-        self.log = log
-        self.allow_gaps = str(options.get("allownonconsecutiveoffsets",
-                                          "false")).lower() == "true"
-        stream = log.stream
-        earliest, latest = log.earliest_offsets(), log.latest_offsets()
-
-        if "offsetRanges" in options:
-            ranges = offset_ranges_from_json(stream, options["offsetRanges"])
-        else:
-            # Kafka-parity offsetsForTimes (startingOffsetsByTimestamp /
-            # endingOffsetsByTimestamp families): a timestamp boundary
-            # resolves per partition to the earliest offset with record
-            # time >= the timestamp, via parquet-footer pruning
-            # (DisLog.offsets_for_time). No-match resolves to the
-            # partition's latest offset — for a START that means an empty
-            # read, for an END it means read-to-tail, both Kafka's
-            # conventions.
-            if "startingTimestamp" in options:
-                starts = log.offsets_for_time(options["startingTimestamp"])
-                start = {p: starts.get(p, EARLIEST) for p in earliest}
+    def __init__(self, source: "Subscription | DisLog", options):
+        sub = _as_subscription(source)
+        logs = sub.logs()
+        if not logs:
+            raise ValueError(f"subscribePattern {sub.rx.pattern!r} matches "
+                             f"no stream under {sub.root}")
+        ranges: list[OffsetRange] = []
+        for log in logs:
+            if "offsetRanges" in options:
+                ranges += resolve_ranges(log, offset_ranges_from_json(
+                    log.stream, options["offsetRanges"]))
             else:
-                start = _parse_boundary(
-                    options.get("startingOffsets", "earliest"),
-                    stream, earliest.keys(), EARLIEST)
-            if "endingTimestamp" in options:
-                ends = log.offsets_for_time(options["endingTimestamp"])
-                end = {p: ends.get(p, LATEST) for p in earliest}
-            else:
-                end = _parse_boundary(options.get("endingOffsets", "latest"),
-                                      stream, earliest.keys(), LATEST)
-            ranges = [OffsetRange(stream, p, start.get(p, EARLIEST),
-                                  end.get(p, LATEST))
-                      for p in sorted(earliest)]
-        self.ranges = resolve_sentinels(ranges, earliest, latest)
-        from .dis_batch import check_consecutive, check_data_loss
-
-        fail = str(options.get("failondataloss", "true")).lower() == "true"
-        self.ranges = check_data_loss(log, self.ranges, fail)
-        check_consecutive(log, self.ranges, self.allow_gaps)
+                start = _boundary(log, options, "starting", EARLIEST)
+                end = _boundary(log, options, "ending", LATEST)
+                ranges += [OffsetRange(log.stream, p, start[p], end[p])
+                           for p in sorted(start)]
+        self.planned = _checked_partitions(
+            sub, ranges, _flag(options, "failondataloss", "true"),
+            _flag(options, "allownonconsecutiveoffsets"))
 
     def partitions(self):
-        return _plan_partitions(self.log, self.ranges)
+        return self.planned
 
     def read(self, partition: RangePartition):
         yield from _read_range_batches(partition)
@@ -294,59 +396,27 @@ def _parse_duration_s(raw) -> float:
     return float(s)
 
 
-def _parse_boundary(raw: str, stream: str, parts, sentinel: int) -> dict[int, int]:
-    if raw == "earliest":
-        return {p: EARLIEST for p in parts}
-    if raw == "latest":
-        return {p: LATEST for p in parts}
-    offs = partition_offsets_from_json(raw)
-    return {p: o for (s, p), o in offs.items() if s == stream}
-
-
-class DisMultiStreamReader(DataSourceReader):
-    """subscribePattern — regex over the stream directories under the log
-    root, full scan of every match (ConsumerStrategies.SubscribePattern,
-    ConsumerStrategy.scala:132-171; partition pickup happens at plan time
-    because the directory listing IS the subscription)."""
-
-    def __init__(self, root: str, pattern: str):
-        import re
-
-        self.logs = []
-        rx = re.compile(pattern)
-        for name in sorted(os.listdir(root)):
-            log = DisLog(root, name)
-            if rx.fullmatch(name) and log.exists():
-                self.logs.append(log)
-        if not self.logs:
-            raise ValueError(
-                f"subscribePattern {pattern!r} matches no stream under {root}")
-
-    def partitions(self):
-        out = []
-        for log in self.logs:
-            earliest, latest = log.earliest_offsets(), log.latest_offsets()
-            ranges = [OffsetRange(log.stream, p, earliest[p], latest[p])
-                      for p in sorted(earliest)]
-            out.extend(_plan_partitions(log, ranges))
-        return out
-
-    def read(self, partition: RangePartition):
-        yield from _read_range_batches(partition)
-
-
 # --------------------------------------------------------------- streaming
 
 class DisStreamReader(DataSourceStreamReader):
-    """Micro-batch reader ≅ DirectDISInputDStream (SURVEY.md §3.1).
+    """Micro-batch reader over a subscription ≅ DirectDISInputDStream
+    (SURVEY.md §3.1).
 
-    Offsets JSON dialect in the checkpoint: {"0": 23, "1": 42} — per
-    partition next-offset-to-read, exactly the reference's currentOffsets
-    map (DirectDISInputDStream.scala:84).
+    Every position — frontier, floor, rate split — is keyed by
+    ``(stream, partition)``; the subscription serializes the keys into the
+    offsets JSON (see Subscription). Each ``latestOffset()`` re-lists the
+    subscription, and one admission rule covers a partition added to a
+    stream (dynamic add, DirectDISInputDStream.scala:185-220) and a stream
+    newly matched by a pattern: the key enters at its EARLIEST offset, and
+    that offset becomes its floor. Spark's next ``partitions()`` start is
+    the previous batch's end, which lacks the key, so without the floor
+    the read would start at 0 — a spurious failOnDataLoss error on a
+    retention-trimmed log, and a blown rate budget (lag is measured from
+    earliest).
     """
 
-    def __init__(self, log: DisLog, options):
-        self.log = log
+    def __init__(self, source: "Subscription | DisLog", options):
+        self.sub = _as_subscription(source)
         self.max_per_trigger = int(options.get("maxoffsetspertrigger", 0) or 0)
         # Kafka-source option parity: hold a trigger back until at least
         # minOffsetsPerTrigger records are available, unless
@@ -366,61 +436,48 @@ class DisStreamReader(DataSourceStreamReader):
         self.max_rate_per_partition = float(
             options.get("maxrateperpartition", 0) or 0)
         self.batch_seconds = float(options.get("batchseconds", 1.0))
-        self.starting = options.get("startingoffsets", "earliest")
-        self.starting_ts = options.get("startingtimestamp")
+        self.options = options
         # ConsumerStrategies.Assign for streams (ConsumerStrategy.scala:
         # 186-213): pin an explicit partition set. Planning never sees
         # unassigned partitions, and — deliberately, matching the
         # reference's Assign semantics — dynamic partition ADD does not
         # apply: the subscription is the fixed set, not the log listing.
         raw_assign = options.get("assign")
-        self.assigned: set[int] | None = None
+        self.assigned: set[tuple[str, int]] | None = None
         if raw_assign:
-            from .offsets import partitions_from_json
-
-            by_stream = partitions_from_json(raw_assign)
-            self.assigned = {p for s, ps in by_stream.items()
-                             if s == log.stream for p in ps}
-        self.allow_gaps = str(options.get("allownonconsecutiveoffsets",
-                                          "false")).lower() == "true"
-        self.fail_on_data_loss = str(options.get("failondataloss",
-                                                 "true")).lower() == "true"
+            self.assigned = {(s, p) for s, ps in
+                             partitions_from_json(raw_assign).items()
+                             for p in ps}
+        self.allow_gaps = _flag(options, "allownonconsecutiveoffsets")
+        self.fail_on_data_loss = _flag(options, "failondataloss", "true")
         # Driver-side frontier (the reference's currentOffsets map,
         # DirectDISInputDStream.scala:84). The runner keeps this reader
         # alive across triggers; latestOffset() receives no start argument,
         # so progress is tracked here and re-synced from every
         # partitions()/commit() callback (authoritative on restart, when
         # Spark replays from its offset log).
-        self._current: dict[int, int] | None = None
+        self._current: dict[tuple[str, int], int] | None = None
         # Authoritative processed floor — max offsets Spark itself has
-        # handed us (partitions() starts, commit() ends). Guards against
-        # re-reading data when a post-restart latestOffset() had to plan
-        # against a stale frontier (see partitions()).
-        self._floor: dict[int, int] = {}
+        # handed us (partitions() starts, commit() ends) and admission
+        # points. Guards against re-reading data when a post-restart
+        # latestOffset() had to plan against a stale frontier (see
+        # partitions()).
+        self._floor: dict[tuple[str, int], int] = {}
         # Backpressure ≅ DirectKafkaRateController + PIDRateEstimator
         # (DirectDISInputDStream.scala:57-58,120-127). The estimator feeds
         # measured processing rate back into the lag-proportional split.
-        self.backpressure = str(options.get("backpressureenabled",
-                                            "false")).lower() == "true"
         self.initial_rate = float(options.get("backpressureinitialrate",
                                               0) or 0)
-        self.min_rate = float(options.get("backpressureminrate", 100) or 100)
         self._pid = PIDRateEstimator(
             batch_interval_ms=self.batch_seconds * 1000.0,
-            min_rate=self.min_rate) if self.backpressure else None
+            min_rate=float(options.get("backpressureminrate", 100) or 100)
+        ) if _flag(options, "backpressureenabled") else None
         # FIFO of (planned_monotonic_ms, planned_new_records) per batch,
         # consumed by commit() to measure each batch's processing delay.
         self._inflight: deque[tuple[float, int]] = deque()
-        # Planner trace knob: set SPARK_DIS_TRACE=/path/to/file before the
-        # session starts to append one line per initialOffset/latestOffset/
-        # partitions call (driver-side only; readers never trace). Resolved
-        # once here so the planner hot path does no env lookups.
-        self._trace_path = os.environ.get("SPARK_DIS_TRACE")
 
-    def _trace(self, msg: str) -> None:
-        if self._trace_path:
-            with open(self._trace_path, "a") as f:
-                f.write(f"pid={os.getpid()} id={id(self)} {msg}\n")
+    def _in_set(self, key: tuple[str, int]) -> bool:
+        return self.assigned is None or key in self.assigned
 
     # -- planning (driver side) --
 
@@ -428,32 +485,19 @@ class DisStreamReader(DataSourceStreamReader):
         """≅ ConsumerStrategy.onStart seek (ConsumerStrategy.scala:82-115);
         startingTimestamp = the Kafka source's timestamp seek
         (offsetsForTimes via DisLog.offsets_for_time)."""
-        if self.starting_ts is not None:
-            out = self.log.offsets_for_time(self.starting_ts)
-        elif self.starting == "latest":
-            out = self.log.latest_offsets()
-        elif self.starting == "earliest":
-            out = self.log.earliest_offsets()
-        else:
-            offs = partition_offsets_from_json(self.starting)
-            earliest = self.log.earliest_offsets()
-            latest = self.log.latest_offsets()
-            out = {}
-            for p in earliest:
-                o = offs.get((self.log.stream, p), EARLIEST)
-                out[p] = (latest[p] if o == LATEST
-                          else earliest[p] if o == EARLIEST else o)
-        if self.assigned is not None:
-            out = {p: o for p, o in out.items() if p in self.assigned}
+        out = {}
+        for log in self.sub.logs():
+            for p, o in _boundary(log, self.options, "starting",
+                                  EARLIEST).items():
+                if self._in_set((log.stream, p)):
+                    out[(log.stream, p)] = o
         self._sync(out)
-        self._trace(f"initialOffset -> {out}")
-        return {str(p): o for p, o in out.items()}
+        return self.sub.dumps(out)
 
     def latestOffset(self) -> dict:
         """latestOffsets() + maxMessagesPerPartition() + clamp()
-        (DirectDISInputDStream.scala:185-232). New partitions are picked
-        up here (dynamic add, :185-220) because the log is re-listed every
-        trigger.
+        (DirectDISInputDStream.scala:185-232), over a fresh listing of the
+        subscription.
 
         Rate limiting (maxOffsetsPerTrigger / maxRatePerPartition /
         backpressure PID) applies per planning call, which under a
@@ -479,11 +523,22 @@ class DisStreamReader(DataSourceStreamReader):
         # partitions() call reveals the true committed position — planning
         # from it (not the startingOffsets seed) resumes rate-limited
         # progress immediately.
-        for p, o in self._floor.items():
-            current[p] = max(current.get(p, 0), o)
-        latest = self.log.latest_offsets()
-        if self.assigned is not None:
-            latest = {p: o for p, o in latest.items() if p in self.assigned}
+        for k, o in self._floor.items():
+            current[k] = max(current.get(k, 0), o)
+        latest: dict[tuple[str, int], int] = {}
+        admitted: dict[tuple[str, int], int] = {}
+        for log in self.sub.logs():
+            earliest = None
+            for p, o in log.latest_offsets().items():
+                k = (log.stream, p)
+                if not self._in_set(k):
+                    continue
+                latest[k] = o
+                if k not in current:
+                    if earliest is None:   # listed only when a key is new
+                        earliest = log.earliest_offsets()
+                    admitted[k] = earliest.get(p, 0)
+        begin = {**current, **admitted}
         if self.min_per_trigger and self._last_fire is None:
             # First planning call after initialOffset: never hold. An
             # availableNow drain captures its one target plan here — if the
@@ -494,20 +549,19 @@ class DisStreamReader(DataSourceStreamReader):
             # real backlog; continuous triggers start holding from call 2.
             self._last_fire = time.monotonic() - self.max_trigger_delay_s
         if self.min_per_trigger:
-            avail = sum(max(latest[p] - current.get(p, 0), 0)
-                        for p in latest)
-            now = time.monotonic()
-            if (avail < self.min_per_trigger
-                    and now - self._last_fire < self.max_trigger_delay_s):
+            avail = sum(max(latest[k] - begin[k], 0) for k in latest)
+            if (avail < self.min_per_trigger and time.monotonic()
+                    - self._last_fire < self.max_trigger_delay_s):
                 # Not enough backlog and the delay budget hasn't expired:
-                # decline the trigger (no offset advance -> no batch).
+                # decline the trigger (no offset advance -> no batch; new
+                # keys are admitted by the trigger that fires).
                 self._sync(current)
-                self._trace(f"latestOffset (held: avail={avail} "
-                            f"< min={self.min_per_trigger}) -> {current}")
-                return {str(p): o for p, o in current.items()}
+                return self.sub.dumps(current)
+        for k, o in admitted.items():
+            self._floor[k] = max(self._floor.get(k, 0), o)
         allowed = None
         if self.max_per_trigger or self.max_rate_per_partition or self._pid:
-            lags = {p: max(latest[p] - current.get(p, 0), 0) for p in latest}
+            lags = {k: max(latest[k] - begin[k], 0) for k in latest}
             rate = (self.max_per_trigger / self.batch_seconds
                     if self.max_per_trigger else None)
             if self._pid is not None:
@@ -518,65 +572,59 @@ class DisStreamReader(DataSourceStreamReader):
                     rate = min(rate, est) if rate is not None else est
             allowed = max_messages_per_partition(
                 lags, rate, self.batch_seconds, self.max_rate_per_partition)
-        ends = clamp(current, latest, allowed)
-        if any(ends.get(p, 0) > current.get(p, 0) for p in ends):
+        ends = clamp(begin, latest, allowed)
+        planned = sum(max(ends[k] - begin[k], 0) for k in ends)
+        if planned:
             self._last_fire = time.monotonic()
-        if self._pid is not None:
-            planned = sum(max(ends[p] - current.get(p, 0), 0) for p in ends)
-            # Only batches that advance offsets run (and therefore commit);
-            # a planned=0 idle trigger never gets a matching commit(), so
-            # queueing it would permanently skew the plan/commit pairing
-            # (stale entries inflate processing delay and pin the PID at
-            # min_rate) and grow the deque unboundedly on an idle stream.
-            if planned > 0:
-                self._inflight.append((time.monotonic() * 1000.0, planned))
+        # Only batches that advance offsets run (and therefore commit); a
+        # planned=0 idle trigger never gets a matching commit(), so
+        # queueing it would permanently skew the plan/commit pairing
+        # (stale entries inflate processing delay and pin the PID at
+        # min_rate) and grow the deque unboundedly on an idle stream.
+        if self._pid is not None and planned:
+            self._inflight.append((time.monotonic() * 1000.0, planned))
         self._sync(ends)
-        self._trace(f"latestOffset -> {ends}")
-        return {str(p): o for p, o in ends.items()}
+        return self.sub.dumps(ends)
 
     def partitions(self, start: dict, end: dict):
         """Freeze the micro-batch plan into offset ranges ≅ compute()
         building DISRDD (DirectDISInputDStream.scala:234-265). ``start``
         comes from Spark's offset log, so this also re-syncs the frontier
-        after a checkpoint restart."""
+        after a checkpoint restart. A key only in ``start`` (a stream that
+        stopped matching) is dropped from the plan."""
+        start, end = self.sub.loads(start), self.sub.loads(end)
         ranges = []
-        for p_str, until in end.items():
-            p = int(p_str)
+        for k, until in end.items():
             # _floor = authoritative processed position (Spark-provided
-            # starts + committed ends). If a stale post-restart plan moved
-            # the engine's position behind it, clamp the scan start so no
-            # record is re-read; positions self-heal on the next batch.
-            frm = max(int(start.get(p_str, 0)), self._floor.get(p, 0))
-            if int(until) < frm:   # stale planning after restart — no-op
+            # starts + committed ends + admission points). If a stale
+            # post-restart plan moved the engine's position behind it,
+            # clamp the scan start so no record is re-read; positions
+            # self-heal on the next batch.
+            frm = max(start.get(k, 0), self._floor.get(k, 0))
+            if until < frm:   # stale planning after restart — no-op
                 continue
-            ranges.append(OffsetRange(self.log.stream, p, frm, int(until)))
-        for p_str, o in start.items():
-            p = int(p_str)
+            ranges.append(OffsetRange(k[0], k[1], frm, until))
+        for k, o in start.items():
             # A batch start is commit evidence (everything below it is in
-            # Spark's offset log as processed) ONLY for partitions the
-            # batch actually advances. On restart the engine first issues
-            # a zero-width resync call partitions(latest_wal, latest_wal)
+            # Spark's offset log as processed) ONLY for keys the batch
+            # actually advances. On restart the engine first issues a
+            # zero-width resync call partitions(latest_wal, latest_wal)
             # BEFORE replaying the uncommitted batch; taking that start as
             # floor would clamp the genuine replay [prev_wal, latest_wal)
             # to empty and silently drop a committed-to-WAL batch (exactly
             # the data-loss mode the replay exists to prevent — caught by
             # the dis_restart_streamed oracle flake, pinned by
             # test_replay_uncommitted_batch_after_restart).
-            if int(end.get(p_str, o)) > int(o):
-                self._floor[p] = max(self._floor.get(p, 0), int(o))
-        self._sync({int(p): int(o) for p, o in end.items()})
-        from .dis_batch import check_consecutive, check_data_loss
-
-        ranges = check_data_loss(self.log, ranges, self.fail_on_data_loss)
-        check_consecutive(self.log, ranges, self.allow_gaps)
-        planned = _plan_partitions(self.log, ranges)
-        self._trace(f"partitions start={start} end={end} floor={self._floor} "
-                    f"-> {[(r.partition, r.from_offset, r.until_offset) for r in ranges]}")
+            if end.get(k, o) > o:
+                self._floor[k] = max(self._floor.get(k, 0), o)
+        self._sync(end)
+        planned = _checked_partitions(self.sub, ranges,
+                                      self.fail_on_data_loss, self.allow_gaps)
         if planned:
             return planned
         # Spark requires >=1 partition per batch; emit one empty range.
-        first = next(iter(end)) if end else "0"
-        return [RangePartition(int(first), 0, 0, (), self.log.stream)]
+        stream, p = next(iter(end), ("", 0))
+        return [RangePartition(p, 0, 0, (), stream)]
 
     def commit(self, end: dict) -> None:
         """≅ commitAll() (DirectDISInputDStream.scala:307-328). Offsets
@@ -585,9 +633,9 @@ class DisStreamReader(DataSourceStreamReader):
         Also the backpressure measurement point: batch completion closes
         the oldest in-flight plan and feeds (elements, processing delay,
         scheduling delay) to the PID estimator."""
-        offs = {int(p): int(o) for p, o in end.items()}
-        for p, o in offs.items():
-            self._floor[p] = max(self._floor.get(p, 0), o)
+        offs = self.sub.loads(end)
+        for k, o in offs.items():
+            self._floor[k] = max(self._floor.get(k, 0), o)
         self._sync(offs)
         if self._pid is not None and self._inflight:
             planned_ms, elements = self._inflight.popleft()
@@ -597,160 +645,12 @@ class DisStreamReader(DataSourceStreamReader):
                                 0.0)
             self._pid.compute(now_ms, elements, processing_ms, scheduling_ms)
 
-    def _sync(self, offsets: dict[int, int]) -> None:
+    def _sync(self, offsets: dict[tuple[str, int], int]) -> None:
         """Advance the driver-side frontier monotonically."""
         cur = self._current or {}
-        for p, o in offsets.items():
-            cur[p] = max(cur.get(p, 0), int(o))
-        self._current = cur
-
-    # -- execution (executor side) --
-
-    def read(self, partition: RangePartition):
-        yield from _read_range_batches(partition)
-
-
-class DisPatternStreamReader(DataSourceStreamReader):
-    """STREAMING SubscribePattern — the streaming twin of the reference's
-    periodic regex re-match (ConsumerStrategy.scala:132-171: the DStream
-    re-evaluates the pattern subscription every batch, so topics CREATED
-    mid-job are picked up without a restart; the r8 verdict's #2 ask —
-    the batch DisMultiStreamReader only matches at plan time).
-
-    Every ``latestOffset()`` call re-lists the log root and re-matches
-    the regex; a NEWLY APPEARING matching stream enters the frontier at
-    its EARLIEST offsets (the same discipline dynamic partition-add uses
-    — clamp starts unknown positions from the beginning), so no record
-    of a late-created stream is missed. Offsets are keyed
-    ``"<stream>/<partition>"`` — the multi-stream generalization of the
-    single-stream reader's per-partition map; Spark's offset log stores
-    the dict as JSON either way, so checkpoint recovery works unchanged
-    (the _floor guard mirrors DisStreamReader's restart discipline).
-
-    maxOffsetsPerTrigger splits the per-trigger budget across ALL
-    matched streams' partitions proportionally to lag (rate.py's math is
-    key-type agnostic).
-    """
-
-    def __init__(self, root: str, pattern: str, options):
-        import re
-
-        self.root = root
-        self.rx = re.compile(pattern)
-        self.starting = options.get("startingoffsets", "earliest")
-        self.max_per_trigger = int(options.get("maxoffsetspertrigger", 0)
-                                   or 0)
-        self.batch_seconds = float(options.get("batchseconds", 1.0))
-        self.fail_on_data_loss = str(options.get("failondataloss",
-                                                 "true")).lower() == "true"
-        self.allow_gaps = str(options.get("allownonconsecutiveoffsets",
-                                          "false")).lower() == "true"
-        self._current: dict[str, int] | None = None
-        self._floor: dict[str, int] = {}
-
-    def _logs(self) -> list[DisLog]:
-        out = []
-        for name in sorted(os.listdir(self.root)):
-            log = DisLog(self.root, name)
-            if self.rx.fullmatch(name) and log.exists():
-                out.append(log)
-        return out
-
-    @staticmethod
-    def _key(stream: str, partition: int) -> str:
-        return f"{stream}/{partition}"
-
-    def _sync(self, offsets: dict[str, int]) -> None:
-        cur = self._current or {}
         for k, o in offsets.items():
-            cur[k] = max(cur.get(k, 0), int(o))
+            cur[k] = max(cur.get(k, 0), o)
         self._current = cur
-
-    # -- planning (driver side) --
-
-    def initialOffset(self) -> dict:
-        out: dict[str, int] = {}
-        for log in self._logs():
-            offs = (log.latest_offsets() if self.starting == "latest"
-                    else log.earliest_offsets())
-            for p, o in offs.items():
-                out[self._key(log.stream, p)] = o
-        self._sync(out)
-        return dict(out)
-
-    def latestOffset(self) -> dict:
-        if self._current is None:
-            self.initialOffset()
-        current = dict(self._current)
-        for k, o in self._floor.items():
-            current[k] = max(current.get(k, 0), o)
-        latest: dict[str, int] = {}
-        for log in self._logs():
-            earliest = log.earliest_offsets()
-            for p, o in log.latest_offsets().items():
-                k = self._key(log.stream, p)
-                latest[k] = o
-                if k not in current:
-                    # newly matched stream (or new partition): the
-                    # periodic re-match admits it at its earliest offset.
-                    # Record the admission point as the key's FLOOR too:
-                    # Spark's start dict in the next partitions() call is
-                    # the PREVIOUS batch's end, which lacks the new key, so
-                    # frm would fall back to 0 — for a retention-trimmed
-                    # log (earliest > 0) that is a spurious failOnDataLoss
-                    # error (or a silent divergence from the admission
-                    # point with failOnDataLoss=false), and the lag-based
-                    # budget (lag measured from earliest) would be blown
-                    # by a read that starts at 0.
-                    adm = earliest.get(p, 0)
-                    current[k] = adm
-                    self._floor[k] = max(self._floor.get(k, 0), adm)
-        allowed = None
-        if self.max_per_trigger:
-            lags = {k: max(latest[k] - current.get(k, 0), 0)
-                    for k in latest}
-            allowed = max_messages_per_partition(
-                lags, self.max_per_trigger / self.batch_seconds,
-                self.batch_seconds)
-        ends = clamp(current, latest, allowed)
-        self._sync(ends)
-        return {k: o for k, o in ends.items()}
-
-    def partitions(self, start: dict, end: dict):
-        from .dis_batch import check_consecutive, check_data_loss
-
-        by_stream: dict[str, list[OffsetRange]] = {}
-        for k, until in end.items():
-            stream, p = k.rsplit("/", 1)
-            frm = max(int(start.get(k, 0)), self._floor.get(k, 0))
-            if int(until) < frm:
-                continue
-            by_stream.setdefault(stream, []).append(
-                OffsetRange(stream, int(p), frm, int(until)))
-        for k, o in start.items():
-            # same advance-evidence rule as DisStreamReader.partitions:
-            # a start is floor evidence only when the batch advances it
-            if int(end.get(k, o)) > int(o):
-                self._floor[k] = max(self._floor.get(k, 0), int(o))
-        self._sync({k: int(o) for k, o in end.items()})
-        planned: list[RangePartition] = []
-        for stream in sorted(by_stream):
-            log = DisLog(self.root, stream)
-            ranges = check_data_loss(log, by_stream[stream],
-                                     self.fail_on_data_loss)
-            check_consecutive(log, ranges, self.allow_gaps)
-            planned.extend(_plan_partitions(log, ranges))
-        if planned:
-            return planned
-        first = next(iter(end), "none/0")
-        stream, p = first.rsplit("/", 1)
-        return [RangePartition(int(p), 0, 0, (), stream)]
-
-    def commit(self, end: dict) -> None:
-        offs = {k: int(o) for k, o in end.items()}
-        for k, o in offs.items():
-            self._floor[k] = max(self._floor.get(k, 0), o)
-        self._sync(offs)
 
     # -- execution (executor side) --
 

@@ -434,7 +434,7 @@ class DisLog:
 
         Readers pick the new partitions up on their next planning pass —
         the streaming reader re-lists the log every latestOffset() call and
-        clamp() starts unknown partitions at offset 0, mirroring the
+        admits a new partition at its earliest offset, mirroring the
         dynamic-add path (DirectDISInputDStream.scala:185-220)."""
         total = self.num_partitions() + n
         self._write_meta({"num_partitions": total,

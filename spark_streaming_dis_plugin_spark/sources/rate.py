@@ -64,10 +64,10 @@ def clamp(
 ) -> dict[int, int]:
     """Batch end offsets: min(current + allowed, latest) per partition.
 
-    cf. DirectDISInputDStream.scala:223-232. Partitions present in
-    ``latest`` but not ``current`` are new (dynamic partition add,
-    :185-220) and start from their earliest known position, here treated
-    as offset 0 by the caller.
+    cf. DirectDISInputDStream.scala:223-232. A partition present in
+    ``latest`` but not ``current`` starts at 0; the streaming reader puts
+    every newly admitted partition in ``current`` at its earliest offset
+    first (dynamic partition add, :185-220).
     """
     out = {}
     for part, lat in latest.items():

@@ -1254,3 +1254,99 @@ def test_tws_timer_sessions_match_timeout_gate(spark, log, tmp_path):
     aip = run(sessions_with_timeout, "aip_sess")
     assert len(tws) > 0
     assert tws == aip
+
+
+def _append_rows(log: DisLog, partition: int, n: int, tag: str) -> None:
+    import pandas as pd
+
+    log.append(pd.DataFrame({
+        "partition": [partition] * n,
+        "key": [f"{tag}{i}" for i in range(n)],
+        "value": [f"{tag}-v{i}" for i in range(n)],
+        "timestamp": pd.to_datetime(
+            [1_700_000_000_000_000 + i for i in range(n)], unit="us"),
+    }))
+
+
+def test_stream_offsets_json_shape_named_stream(tmp_path):
+    """Checkpoints (and drain.checkpoint_committed_rows) depend on the
+    named-stream offsets JSON: one ``"<partition>": next_offset`` entry
+    per partition, in partition order, no stream prefix."""
+    import json
+
+    from spark_streaming_dis_plugin_spark.sources.dis_datasource import (
+        DisStreamReader,
+    )
+
+    log = DisLog(str(tmp_path), "shape").create(2)
+    _append_rows(log, 0, 3, "a")
+    _append_rows(log, 1, 5, "b")
+    reader = DisStreamReader(DisLog(log.root, log.stream), {})
+    first = reader.initialOffset()
+    assert first == {"0": 0, "1": 0}
+    assert json.dumps(first) == '{"0": 0, "1": 0}'
+    latest = reader.latestOffset()
+    assert latest == {"0": 3, "1": 5}
+    assert json.dumps(latest) == '{"0": 3, "1": 5}'
+
+
+def test_added_partition_admitted_at_earliest_offset(tmp_path):
+    """A partition added mid-stream whose head was expired by retention
+    enters the plan at its earliest offset, not at 0: Spark's next start
+    (the previous end) lacks the partition, and reading from 0 would be a
+    spurious failOnDataLoss error."""
+    from spark_streaming_dis_plugin_spark.sources.dis_datasource import (
+        DisStreamReader,
+    )
+    from spark_streaming_dis_plugin_spark.sources.dis_log import (
+        expire_before,
+    )
+
+    log = DisLog(str(tmp_path), "grow").create(1)
+    _append_rows(log, 0, 5, "a")
+    reader = DisStreamReader(DisLog(log.root, log.stream), {})
+    start = reader.initialOffset()
+    prev_end = reader.latestOffset()
+    reader.partitions(start, prev_end)
+    reader.commit(prev_end)
+
+    log.add_partitions(1)
+    _append_rows(log, 1, 5, "b")
+    _append_rows(log, 1, 5, "c")
+    expire_before(log, {1: 5})
+    assert log.earliest_offsets() == {0: 0, 1: 5}
+
+    end = reader.latestOffset()
+    assert end == {"0": 5, "1": 10}
+    plan = {p.partition: (p.from_offset, p.until_offset)
+            for p in reader.partitions(prev_end, end)}
+    assert plan == {1: (5, 10)}
+
+
+def test_subscribe_pattern_batch_read_gates_compacted_stream(spark,
+                                                             tmp_path):
+    """A subscribePattern batch read runs the same gates as a named read:
+    a compacted (non-consecutive) stream fails without
+    allowNonConsecutiveOffsets and reads only the surviving rows with
+    it."""
+    from spark_streaming_dis_plugin_spark.sources.dis_log import compact_log
+
+    spark.dataSource.register(DisDataSource)
+    root = str(tmp_path / "cmproot")
+    log = DisLog(root, "cmp_a").create(1)
+    _append_rows(log, 0, 3, "k")
+    _append_rows(log, 0, 3, "k")          # same keys again: 3 superseded
+    assert compact_log(log) == {0: 3}
+
+    def read(**opts):
+        r = (spark.read.format("dis").option("path", root)
+             .option("subscribePattern", "cmp_.*"))
+        for k, v in opts.items():
+            r = r.option(k, v)
+        return r.load()
+
+    with pytest.raises(Exception, match="non-consecutive"):
+        read().count()
+    rows = read(allowNonConsecutiveOffsets="true").collect()
+    assert sorted(r["offset"] for r in rows) == [3, 4, 5]
+    assert {r["stream"] for r in rows} == {"cmp_a"}

@@ -1,7 +1,8 @@
-"""DisPatternStreamReader unit tests (r8 verdict #2): per-trigger regex
-re-match, earliest-start admission of new streams, composite-key rate
-split, and the post-restart floor guard — the planner logic under the
-dis_pattern_add_streamed e2e gate, driven directly without an engine.
+"""DisStreamReader over a pattern Subscription (r8 verdict #2):
+per-trigger regex re-match, earliest-start admission of new streams,
+composite-key rate split, and the post-restart floor guard — the planner
+logic under the dis_pattern_add_streamed e2e gate, driven directly
+without an engine.
 """
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import pandas as pd
 import pytest
 
 from spark_streaming_dis_plugin_spark.sources.dis_datasource import (
-    DisPatternStreamReader,
+    DisStreamReader, Subscription,
 )
 from spark_streaming_dis_plugin_spark.sources.dis_log import DisLog
 
@@ -32,7 +33,7 @@ def _mk_log(root, stream, n_parts, rows_per_part):
 
 def test_new_matching_stream_admitted_at_earliest(tmp_path):
     _mk_log(tmp_path, "logs_a", 2, 5)
-    r = DisPatternStreamReader(str(tmp_path), "logs_.*", {})
+    r = DisStreamReader(Subscription(str(tmp_path), pattern="logs_.*"), {})
     first = r.initialOffset()
     assert first == {"logs_a/0": 0, "logs_a/1": 0}
     ends = r.latestOffset()
@@ -49,8 +50,8 @@ def test_new_matching_stream_admitted_at_earliest(tmp_path):
 def test_rate_budget_splits_across_streams_by_lag(tmp_path):
     _mk_log(tmp_path, "s_one", 1, 30)
     _mk_log(tmp_path, "s_two", 1, 10)
-    r = DisPatternStreamReader(str(tmp_path), "s_.*",
-                               {"maxoffsetspertrigger": "8"})
+    r = DisStreamReader(Subscription(str(tmp_path), pattern="s_.*"),
+                        {"maxoffsetspertrigger": "8"})
     r.initialOffset()
     ends = r.latestOffset()
     # lag-proportional: 30:10 lag -> 6:2 of the 8-record budget
@@ -61,7 +62,7 @@ def test_rate_budget_splits_across_streams_by_lag(tmp_path):
 
 def test_partitions_respect_floor_after_restart(tmp_path):
     _mk_log(tmp_path, "p_x", 1, 10)
-    r = DisPatternStreamReader(str(tmp_path), "p_.*", {})
+    r = DisStreamReader(Subscription(str(tmp_path), pattern="p_.*"), {})
     r.initialOffset()
     # engine committed through 7 in a previous incarnation
     r.commit({"p_x/0": 7})
@@ -79,7 +80,7 @@ def test_zero_width_resync_not_taken_as_floor(tmp_path):
     floor (same advance-evidence rule as the single-stream reader):
     the genuine replay of [5, 10) that follows must not be clamped."""
     _mk_log(tmp_path, "q_x", 1, 10)
-    r = DisPatternStreamReader(str(tmp_path), "q_.*", {})
+    r = DisStreamReader(Subscription(str(tmp_path), pattern="q_.*"), {})
     r.initialOffset()
     r.partitions({"q_x/0": 10}, {"q_x/0": 10})   # zero-width resync
     parts = r.partitions({"q_x/0": 5}, {"q_x/0": 10})
@@ -98,7 +99,7 @@ def test_new_stream_with_trimmed_log_admitted_at_earliest(tmp_path):
     )
 
     _mk_log(tmp_path, "t_base", 1, 5)
-    r = DisPatternStreamReader(str(tmp_path), "t_.*", {})
+    r = DisStreamReader(Subscription(str(tmp_path), pattern="t_.*"), {})
     r.initialOffset()
     ends1 = r.latestOffset()
     assert ends1 == {"t_base/0": 5}
@@ -137,7 +138,7 @@ def test_revoked_stream_dropped_from_plan(tmp_path):
 
     _mk_log(tmp_path, "r_keep", 1, 10)
     _mk_log(tmp_path, "r_gone", 1, 4)
-    r = DisPatternStreamReader(str(tmp_path), "r_.*", {})
+    r = DisStreamReader(Subscription(str(tmp_path), pattern="r_.*"), {})
     r.initialOffset()
     ends1 = r.latestOffset()
     assert ends1 == {"r_keep/0": 10, "r_gone/0": 4}
@@ -161,3 +162,16 @@ def test_revoked_stream_dropped_from_plan(tmp_path):
     parts2 = r.partitions(dict(ends1), ends2)  # start still has r_gone
     planned = {(p.stream, p.from_offset, p.until_offset) for p in parts2}
     assert planned == {("r_keep", 10, 13)}    # no ghost partitions
+
+
+def test_max_rate_per_partition_caps_each_stream_partition(tmp_path):
+    """maxRatePerPartition caps every ``<stream>/<partition>`` key of a
+    pattern subscription, exactly as it caps a named stream's
+    partitions."""
+    _mk_log(tmp_path, "m_one", 2, 30)
+    _mk_log(tmp_path, "m_two", 1, 10)
+    r = DisStreamReader(Subscription(str(tmp_path), pattern="m_.*"),
+                        {"maxrateperpartition": "4", "batchseconds": "1"})
+    r.initialOffset()
+    assert r.latestOffset() == {"m_one/0": 4, "m_one/1": 4, "m_two/0": 4}
+    assert r.latestOffset() == {"m_one/0": 8, "m_one/1": 8, "m_two/0": 8}
