@@ -131,9 +131,7 @@ def sim_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same rewrite as _assign_nearest (the n x C window exchange is
     # pure overhead for a rnk == 1 slice); same _l2sq arithmetic,
     # array_min's struct order = the (d2, centroid_id) tie-break
-    carr = F.broadcast(
-        cent.agg(F.collect_list(F.struct("centroid_id", "ce"))
-                 .alias("cents")))
+    carr = _array_row(cent, "cents", "centroid_id", "ce")
     scored = F.transform(
         F.col("cents"),
         lambda c: F.struct(_l2sq(F.col("embedding"), c["ce"]).alias("d2"),
@@ -282,6 +280,17 @@ def _rank_to_centroids(emb: DataFrame, cent: DataFrame) -> DataFrame:
             .withColumn("rnk", F.row_number().over(w)))
 
 
+def _array_row(df: DataFrame, name: str, *cols: str) -> DataFrame:
+    """``df`` collapsed into ONE broadcast row: column ``name`` holds an
+    array of ``struct(*cols)``, one per row of ``df`` — the operand a
+    row-local argmin reduces. An empty ``df`` gives NO row, so a cross
+    join with it yields nothing; a bare ``collect_list`` would give one
+    row with an empty array, and every corpus row would get a null
+    argmin."""
+    return F.broadcast(df.agg(F.collect_list(F.struct(*cols)).alias(name))
+                       .where(F.size(name) > 0))
+
+
 def _assign_nearest(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, e, centroid_id): nearest centroid per vector — the
     rnk == 1 slice of :func:`_rank_to_centroids`, computed ROW-LOCALLY.
@@ -296,11 +305,9 @@ def _assign_nearest(emb: DataFrame, cent: DataFrame) -> DataFrame:
     array order), bit-identical result — A/B at sf0.1: the build row
     dropped ~40% and the n x C exchange vanished from the plan. At
     100 TB the saving is the whole point: the corpus-side shuffle of
-    C-times-amplified vectors never happens. ``cent`` must be
-    non-empty (seeded builds and live indexes always are)."""
-    carr = F.broadcast(
-        cent.agg(F.collect_list(F.struct("centroid_id", "ce"))
-                 .alias("cents")))
+    C-times-amplified vectors never happens. An empty ``cent`` assigns
+    nothing: the result has no rows (see :func:`_array_row`)."""
+    carr = _array_row(cent, "cents", "centroid_id", "ce")
     scored = F.transform(
         F.col("cents"),
         lambda c: F.struct(
@@ -969,8 +976,7 @@ def sim_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossJoin + groupBy(vec_id) evaluated the same subspace folds,
     # then paid a corpus-wide hash exchange just to reunite M argmins
     # that never needed to leave the row.
-    cbarr = F.broadcast(
-        cb.agg(F.collect_list(F.struct("code", "ce")).alias("cbs")))
+    cbarr = _array_row(cb, "cbs", "code", "ce")
     return emb.crossJoin(cbarr).select("vec_id", *_pq_code_cols())
 
 
@@ -1296,10 +1302,8 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell is an argmin over the broadcast centroid array (same d2
     # fold + (d2, cid) tie-break as the former rank-1 window), and the
     # M code argmins ride the same select (sim_pq_encode's kernel).
-    carr = F.broadcast(
-        cent.agg(F.collect_list(F.struct("cid", "ce")).alias("cents")))
-    cbarr = F.broadcast(
-        cb.agg(F.collect_list(F.struct("code", "ce")).alias("cbs")))
+    carr = _array_row(cent, "cents", "cid", "ce")
+    cbarr = _array_row(cb, "cbs", "code", "ce")
     cluster = F.array_min(F.transform(
         F.col("cents"),
         lambda c: F.struct(

@@ -22,9 +22,12 @@ Batch (createRDD) maps onto the batch reader with ``offsetRanges`` /
 onto the writer, with offset assignment serialized through the log's
 append protocol (cf. DISSink.scala:23-55).
 
-Readers emit pyarrow RecordBatches (Arrow path — no per-row Python cost);
-each offset range becomes one InputPartition, so a stream partition's
-backlog parallelizes across executors.
+Readers emit pyarrow RecordBatches (Arrow path — no per-row Python cost).
+The planner packs offset ranges, in plan order, into read tasks of up to
+``_TASK_RECORDS`` planned records; a range is never split, so one larger
+than that budget is a task of its own and a backlog still parallelizes
+across executors, while a small micro-batch is one Python task instead of
+one per log partition.
 
 Options:
   path / stream        log root directory / stream name
@@ -98,14 +101,29 @@ ENVELOPE_SCHEMA = StructType([
 
 
 @dataclasses.dataclass
-class RangePartition(InputPartition):
-    """One half-open offset range = one Spark input partition
-    (1:1 with DISRDDPartition, DISRDDPartition.scala:27-36)."""
+class RangePartition:
+    """One half-open offset range of one log partition with its pruned
+    segment files (≅ DISRDDPartition, DISRDDPartition.scala:27-36)."""
     partition: int
     from_offset: int
     until_offset: int
     paths: tuple[str, ...]
     stream: str
+
+
+@dataclasses.dataclass
+class ReadTask(InputPartition):
+    """One Spark input partition — one Python worker task: offset ranges
+    read in plan order (packed by ``_pack``)."""
+    ranges: tuple[RangePartition, ...]
+
+
+# Planned records one read task may carry before the planner opens the
+# next one. Measured at local[2] (BENCH_NOTES "Record-sized read tasks"):
+# a Python read task costs ~230 ms before it reads a record, and 4 ranges
+# of 25k records read in ~800 ms as 4 tasks but ~550 ms as 2 or as 1, so
+# splitting pays only past ~50k records a task.
+_TASK_RECORDS = 1 << 16
 
 
 # Executor-local segment cache ≅ the reference's per-JVM consumer cache
@@ -122,11 +140,9 @@ _SEGMENT_CACHE_CAP = 64
 # Primary bound is decoded BYTES, not entries: this cache lives per Python
 # worker process (several per executor), so an entry-only cap could pin
 # 64 × segment-size per worker with large segmentRows — unlike the
-# reference's one-per-JVM consumer cache. 256 MiB default, overridable via
-# SPARK_DIS_SEGMENT_CACHE_BYTES; the 64-entry cap stays as a secondary
-# limit for many-tiny-segment logs.
-_SEGMENT_CACHE_BYTES_CAP = int(
-    os.environ.get("SPARK_DIS_SEGMENT_CACHE_BYTES", 256 * 1024 * 1024))
+# reference's one-per-JVM consumer cache. 256 MiB; the 64-entry cap stays
+# as a secondary limit for many-tiny-segment logs.
+_SEGMENT_CACHE_BYTES_CAP = 256 * 1024 * 1024
 _SEGMENT_CACHE_STATS = {"hits": 0, "misses": 0}
 
 
@@ -159,30 +175,53 @@ def _read_segment(path: str):
     return table
 
 
-def _read_range_batches(part: RangePartition):
-    """Arrow-native scan of one offset range: segment files were pruned by
-    name at planning; the residual offset filter applies per batch."""
+def _read_range_batches(task: ReadTask):
+    """Arrow-native scan of a task's offset ranges, in order: segment files
+    were pruned by name at planning; the residual offset filter applies
+    per batch."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    for path in part.paths:
-        table = _read_segment(path)
-        off = table.column("offset")
-        mask = pc.and_(pc.greater_equal(off, part.from_offset),
-                       pc.less(off, part.until_offset))
-        table = table.filter(mask)
-        if table.num_rows == 0:
-            continue
-        n = table.num_rows
-        table = pa.table({
-            "stream": pa.array([part.stream] * n, pa.string()),
-            "partition": pa.array([part.partition] * n, pa.int32()),
-            "offset": table.column("offset").cast(pa.int64()),
-            "key": table.column("key").cast(pa.string()),
-            "value": table.column("value").cast(pa.string()),
-            "timestamp": table.column("timestamp").cast(pa.timestamp("us")),
-        })
-        yield from table.to_batches()
+    for part in task.ranges:
+        for path in part.paths:
+            table = _read_segment(path)
+            off = table.column("offset")
+            mask = pc.and_(pc.greater_equal(off, part.from_offset),
+                           pc.less(off, part.until_offset))
+            table = table.filter(mask)
+            if table.num_rows == 0:
+                continue
+            n = table.num_rows
+            table = pa.table({
+                "stream": pa.array([part.stream] * n, pa.string()),
+                "partition": pa.array([part.partition] * n, pa.int32()),
+                "offset": table.column("offset").cast(pa.int64()),
+                "key": table.column("key").cast(pa.string()),
+                "value": table.column("value").cast(pa.string()),
+                "timestamp": table.column("timestamp")
+                .cast(pa.timestamp("us")),
+            })
+            yield from table.to_batches()
+
+
+def _pack(ranges: list[RangePartition]) -> list[ReadTask]:
+    """Ranges -> read tasks, contiguously in plan order: a task takes
+    ranges until the next would carry it past ``_TASK_RECORDS`` planned
+    records. A range is never split, so one over the budget is its own
+    task."""
+    tasks: list[ReadTask] = []
+    cur: list[RangePartition] = []
+    records = 0
+    for r in ranges:
+        n = r.until_offset - r.from_offset
+        if cur and records + n > _TASK_RECORDS:
+            tasks.append(ReadTask(tuple(cur)))
+            cur, records = [], 0
+        cur.append(r)
+        records += n
+    if cur:
+        tasks.append(ReadTask(tuple(cur)))
+    return tasks
 
 
 def _plan_partitions(log: DisLog, ranges: list[OffsetRange]) -> list[RangePartition]:
@@ -333,11 +372,11 @@ def _boundary(log: DisLog, options, name: str,
 
 def _checked_partitions(sub: Subscription, ranges: list[OffsetRange],
                         fail_on_data_loss: bool,
-                        allow_gaps: bool) -> list[RangePartition]:
-    """Gate then plan ``ranges``, one stream at a time: failOnDataLoss
-    (check_data_loss) and the compacted-log gate (check_consecutive,
-    DISRDD.scala:74-75) run for every read, batch or streaming, named
-    or pattern."""
+                        allow_gaps: bool) -> list[ReadTask]:
+    """Gate, plan and pack ``ranges``: failOnDataLoss (check_data_loss)
+    and the compacted-log gate (check_consecutive, DISRDD.scala:74-75) run
+    one stream at a time for every read, batch or streaming, named or
+    pattern; the planned ranges are then packed into read tasks."""
     by_stream: dict[str, list[OffsetRange]] = {}
     for r in ranges:
         by_stream.setdefault(r.stream, []).append(r)
@@ -347,7 +386,7 @@ def _checked_partitions(sub: Subscription, ranges: list[OffsetRange],
         rs = check_data_loss(log, rs, fail_on_data_loss)
         check_consecutive(log, rs, allow_gaps)
         planned.extend(_plan_partitions(log, rs))
-    return planned
+    return _pack(planned)
 
 
 # ------------------------------------------------------------------- batch
@@ -356,7 +395,9 @@ class DisBatchReader(DataSourceReader):
     """Bounded scan over a subscription — the createRDD path
     (DISUtils.scala:240-303). Boundaries and gates resolve once, at
     construction (plan time), for every subscribed stream; a pattern that
-    matches no stream is an error."""
+    matches no stream is an error. ``partitions()`` are the packed read
+    tasks, so a small read is one Python task whatever its partition
+    count."""
 
     def __init__(self, source: "Subscription | DisLog", options):
         sub = _as_subscription(source)
@@ -381,7 +422,7 @@ class DisBatchReader(DataSourceReader):
     def partitions(self):
         return self.planned
 
-    def read(self, partition: RangePartition):
+    def read(self, partition: ReadTask):
         yield from _read_range_batches(partition)
 
 
@@ -587,11 +628,12 @@ class DisStreamReader(DataSourceStreamReader):
         return self.sub.dumps(ends)
 
     def partitions(self, start: dict, end: dict):
-        """Freeze the micro-batch plan into offset ranges ≅ compute()
-        building DISRDD (DirectDISInputDStream.scala:234-265). ``start``
-        comes from Spark's offset log, so this also re-syncs the frontier
-        after a checkpoint restart. A key only in ``start`` (a stream that
-        stopped matching) is dropped from the plan."""
+        """Freeze the micro-batch plan into offset ranges packed into read
+        tasks ≅ compute() building DISRDD (DirectDISInputDStream.scala:
+        234-265). ``start`` comes from Spark's offset log, so this also
+        re-syncs the frontier after a checkpoint restart. A key only in
+        ``start`` (a stream that stopped matching) is dropped from the
+        plan."""
         start, end = self.sub.loads(start), self.sub.loads(end)
         ranges = []
         for k, until in end.items():
@@ -624,7 +666,7 @@ class DisStreamReader(DataSourceStreamReader):
             return planned
         # Spark requires >=1 partition per batch; emit one empty range.
         stream, p = next(iter(end), ("", 0))
-        return [RangePartition(p, 0, 0, (), stream)]
+        return [ReadTask((RangePartition(p, 0, 0, (), stream),))]
 
     def commit(self, end: dict) -> None:
         """≅ commitAll() (DirectDISInputDStream.scala:307-328). Offsets
@@ -654,7 +696,7 @@ class DisStreamReader(DataSourceStreamReader):
 
     # -- execution (executor side) --
 
-    def read(self, partition: RangePartition):
+    def read(self, partition: ReadTask):
         yield from _read_range_batches(partition)
 
 

@@ -92,3 +92,16 @@ def test_adc_top3_drops_candidates_with_a_missing_code(spark):
     got = [(r["neighbor_id"], r["adc_d2"], r["rnk"])
            for r in _adc_top3(scored).orderBy("rnk").collect()]
     assert got == [(12, 2.0, 1), (11, 4.0, 2), (13, 8.0, 3)]
+
+
+def test_empty_centroid_set_assigns_no_rows(spark):
+    """An empty centroid set assigns nothing. collect_list over no rows is
+    ONE row holding an empty array; cross-joined as is, it would give
+    every corpus row a null centroid_id."""
+    from spark_streaming_dis_plugin_spark.operators.similarity import (
+        _assign_nearest)
+
+    emb = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [1.0, 0.0])], "vec_id long, e array<double>")
+    cent = spark.createDataFrame([], "centroid_id long, ce array<double>")
+    assert _assign_nearest(emb, cent).collect() == []

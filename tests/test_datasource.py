@@ -24,6 +24,8 @@ from spark_streaming_dis_plugin_spark.streaming.sink import (
 )
 from spark_streaming_dis_plugin_spark.tables import load_events
 
+from .read_plan import planned_ranges
+
 
 @pytest.fixture(scope="module")
 def log(spark, sf_dir, tmp_path_factory) -> DisLog:
@@ -1319,7 +1321,7 @@ def test_added_partition_admitted_at_earliest_offset(tmp_path):
     end = reader.latestOffset()
     assert end == {"0": 5, "1": 10}
     plan = {p.partition: (p.from_offset, p.until_offset)
-            for p in reader.partitions(prev_end, end)}
+            for p in planned_ranges(reader.partitions(prev_end, end))}
     assert plan == {1: (5, 10)}
 
 
@@ -1350,3 +1352,100 @@ def test_subscribe_pattern_batch_read_gates_compacted_stream(spark,
     rows = read(allowNonConsecutiveOffsets="true").collect()
     assert sorted(r["offset"] for r in rows) == [3, 4, 5]
     assert {r["stream"] for r in rows} == {"cmp_a"}
+
+
+def _small_log(root: str, stream: str, rows: list[int]) -> DisLog:
+    """A log with ``rows[p]`` records in partition p, in two appends."""
+    log = DisLog(root, stream).create(len(rows))
+    for p, n in enumerate(rows):
+        _append_rows(log, p, n // 2, f"p{p}a")
+        _append_rows(log, p, n - n // 2, f"p{p}b")
+    return log
+
+
+def test_small_ranges_pack_into_one_read_task(spark, tmp_path):
+    """A read far under the task budget is ONE read task holding every
+    range in plan order (partition order), for the stream and the batch
+    reader alike, and a batch read still returns partition by partition
+    in offset order."""
+    from spark_streaming_dis_plugin_spark.sources.dis_datasource import (
+        DisBatchReader, DisStreamReader,
+    )
+
+    log = _small_log(str(tmp_path), "small", [7, 3, 5, 4])
+    want = [(p, 0, n) for p, n in enumerate([7, 3, 5, 4])]
+
+    stream = DisStreamReader(DisLog(log.root, log.stream), {})
+    start = stream.initialOffset()
+    tasks = stream.partitions(start, stream.latestOffset())
+    assert len(tasks) == 1
+    assert [(r.partition, r.from_offset, r.until_offset)
+            for r in tasks[0].ranges] == want
+
+    tasks = DisBatchReader(DisLog(log.root, log.stream), {}).partitions()
+    assert len(tasks) == 1
+    assert [(r.partition, r.from_offset, r.until_offset)
+            for r in planned_ranges(tasks)] == want
+
+    spark.dataSource.register(DisDataSource)
+    df = _dis(spark, log).load()
+    assert df.rdd.getNumPartitions() == 1
+    assert [(r["partition"], r["offset"]) for r in df.collect()] == \
+        [(p, o) for p, _, n in want for o in range(n)]
+
+
+def test_range_over_budget_is_its_own_read_task(tmp_path, monkeypatch):
+    """Packing is contiguous in plan order and never splits a range: a
+    range larger than the budget is a task of its own, and the ranges
+    around it pack up to the budget."""
+    from spark_streaming_dis_plugin_spark.sources import dis_datasource as D
+
+    monkeypatch.setattr(D, "_TASK_RECORDS", 8)
+    log = _small_log(str(tmp_path), "big", [5, 5, 20, 3, 3])
+    tasks = D.DisBatchReader(DisLog(log.root, log.stream), {}).partitions()
+    assert [[(r.partition, r.until_offset - r.from_offset)
+             for r in t.ranges] for t in tasks] == \
+        [[(0, 5)], [(1, 5)], [(2, 20)], [(3, 3), (4, 3)]]
+
+
+def test_empty_micro_batch_plans_one_placeholder_task(tmp_path):
+    """Spark needs at least one input partition per micro-batch: a batch
+    with nothing to read plans one task with one empty range, and reading
+    it yields no rows."""
+    from spark_streaming_dis_plugin_spark.sources import dis_datasource as D
+
+    log = _small_log(str(tmp_path), "idle", [4, 4])
+    reader = D.DisStreamReader(DisLog(log.root, log.stream), {})
+    reader.initialOffset()
+    end = reader.latestOffset()
+    tasks = reader.partitions(end, end)
+    assert len(tasks) == 1
+    (only,) = planned_ranges(tasks)
+    assert only.from_offset == only.until_offset and only.paths == ()
+    assert list(D._read_range_batches(tasks[0])) == []
+
+
+def test_packed_batch_through_sink_keeps_partition_order(spark, tmp_path):
+    """A multi-partition batch read as ONE task and written through
+    DisForeachBatchSink: every output partition holds its source
+    partition's surviving records exactly once, in source offset order."""
+    spark.dataSource.register(DisDataSource)
+    rows = [9, 6, 8, 7]
+    src = _small_log(str(tmp_path / "src"), "packed", rows)
+    out = DisLog(str(tmp_path / "out"), "packed_out").create(len(rows))
+    batch = (_dis(spark, src).load()
+             .where(~F.col("value").endswith("v1"))
+             .select("partition", "key", "value", "timestamp"))
+    assert batch.rdd.getNumPartitions() == 1
+    DisForeachBatchSink(out, "pk")(batch, 0)
+
+    def by_partition(df):
+        got: dict[int, list[str]] = {}
+        for r in df.orderBy("partition", "offset").collect():
+            got.setdefault(r["partition"], []).append(r["value"])
+        return got
+
+    want = by_partition(_dis(spark, src).load()
+                        .where(~F.col("value").endswith("v1")))
+    assert by_partition(_dis(spark, out).load()) == want
+    assert sum(len(v) for v in want.values()) == sum(rows) - 2 * len(rows)

@@ -14,6 +14,8 @@ from spark_streaming_dis_plugin_spark.sources.dis_datasource import (
 )
 from spark_streaming_dis_plugin_spark.sources.dis_log import DisLog
 
+from .read_plan import planned_ranges
+
 
 def _mk_log(root, stream, n_parts, rows_per_part):
     log = DisLog(str(root), stream).create(n_parts)
@@ -67,11 +69,11 @@ def test_partitions_respect_floor_after_restart(tmp_path):
     # engine committed through 7 in a previous incarnation
     r.commit({"p_x/0": 7})
     # a stale plan claiming start 3 is clamped up to the floor
-    parts = r.partitions({"p_x/0": 3}, {"p_x/0": 10})
+    parts = planned_ranges(r.partitions({"p_x/0": 3}, {"p_x/0": 10}))
     assert len(parts) == 1
     assert parts[0].from_offset == 7 and parts[0].until_offset == 10
     # fully-stale plan (until < floor) becomes the empty placeholder
-    parts2 = r.partitions({"p_x/0": 3}, {"p_x/0": 5})
+    parts2 = planned_ranges(r.partitions({"p_x/0": 3}, {"p_x/0": 5}))
     assert parts2[0].from_offset == parts2[0].until_offset
 
 
@@ -83,7 +85,7 @@ def test_zero_width_resync_not_taken_as_floor(tmp_path):
     r = DisStreamReader(Subscription(str(tmp_path), pattern="q_.*"), {})
     r.initialOffset()
     r.partitions({"q_x/0": 10}, {"q_x/0": 10})   # zero-width resync
-    parts = r.partitions({"q_x/0": 5}, {"q_x/0": 10})
+    parts = planned_ranges(r.partitions({"q_x/0": 5}, {"q_x/0": 10}))
     assert parts[0].from_offset == 5 and parts[0].until_offset == 10
 
 
@@ -120,7 +122,7 @@ def test_new_stream_with_trimmed_log_admitted_at_earliest(tmp_path):
     ends2 = r.latestOffset()
     assert ends2["t_new/0"] == 10
     # Spark hands partitions() the PREVIOUS end as start — no t_new key.
-    parts = r.partitions(dict(ends1), ends2)
+    parts = planned_ranges(r.partitions(dict(ends1), ends2))
     by_stream = {(p.stream, p.partition): p for p in parts}
     newp = by_stream[("t_new", 0)]
     assert newp.from_offset == 5 and newp.until_offset == 10
@@ -142,7 +144,8 @@ def test_revoked_stream_dropped_from_plan(tmp_path):
     r.initialOffset()
     ends1 = r.latestOffset()
     assert ends1 == {"r_keep/0": 10, "r_gone/0": 4}
-    parts1 = r.partitions({"r_keep/0": 0, "r_gone/0": 0}, ends1)
+    parts1 = planned_ranges(
+        r.partitions({"r_keep/0": 0, "r_gone/0": 0}, ends1))
     assert {(p.stream, p.from_offset, p.until_offset) for p in parts1} == \
         {("r_keep", 0, 10), ("r_gone", 0, 4)}
     r.commit(ends1)
@@ -159,7 +162,8 @@ def test_revoked_stream_dropped_from_plan(tmp_path):
     }))
     ends2 = r.latestOffset()
     assert ends2 == {"r_keep/0": 13}          # revoked key gone
-    parts2 = r.partitions(dict(ends1), ends2)  # start still has r_gone
+    parts2 = planned_ranges(
+        r.partitions(dict(ends1), ends2))  # start still has r_gone
     planned = {(p.stream, p.from_offset, p.until_offset) for p in parts2}
     assert planned == {("r_keep", 10, 13)}    # no ghost partitions
 
