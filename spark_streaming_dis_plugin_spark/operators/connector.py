@@ -22,7 +22,9 @@ from ..functions.portable import portable_hash_sql
 from ..sources.dis_datasource import register as _register_dis
 from ..plans.registry import register
 from ..scratch import scratch_dir
-from ..sources.dis_log import DEFAULT_NUM_PARTITIONS, envelope, envelope_sql
+from ..sources.dis_log import (
+    DEFAULT_NUM_PARTITIONS, DisLog, envelope, envelope_sql, write_with_offsets,
+)
 from ..tables import load
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -295,7 +297,37 @@ def dis_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ physical source, oracle-gated
 
-_LOG_CACHE: dict[str, str] = {}
+# Every fixture log, built once per process: (name, sf_dir) -> log root.
+_FIXTURE_LOGS: dict[tuple[str, str], str] = {}
+
+
+def _fixture_root(name: str, sf_dir: str, build) -> str:
+    """Root of the fixture log ``name`` for ``sf_dir``: the first call in
+    the process runs ``build(root)`` on a fresh scratch directory, later
+    calls reuse it."""
+    if (name, sf_dir) not in _FIXTURE_LOGS:
+        root = scratch_dir(f"dis_{name}_")
+        build(root)
+        _FIXTURE_LOGS[(name, sf_dir)] = root
+    return _FIXTURE_LOGS[(name, sf_dir)]
+
+
+def _fixture_log(spark: SparkSession, sf_dir: str, stream: str, rows,
+                 order_cols: list, num_partitions: int,
+                 segment_rows: int) -> DisLog:
+    """The fixture DisLog ``stream`` for ``sf_dir``, built once per
+    process: ``rows()`` projects ``partition``, the ``order_cols``, key,
+    value and timestamp; each record's offset is its 0-based rank over
+    ``order_cols`` within its partition (:func:`_carry_offsets`)."""
+    _register_dis(spark)
+
+    def build(root: str) -> None:
+        DisLog(root, stream).create(num_partitions)
+        env = _carry_offsets(spark, rows(), order_cols).select(*_ENV_COLS)
+        write_with_offsets(env, root, stream, num_partitions, segment_rows)
+
+    return DisLog(_fixture_root(stream, sf_dir, build), stream)
+
 
 # Segment size of the shared materialized log. 4000 (was 2000) per the
 # r12 addBatch decomposition: ~25% of the Python source's warm per-batch
@@ -308,22 +340,19 @@ MAT_LOG_SEGMENT_ROWS = 4000
 def _materialized_log(spark: SparkSession, sf_dir: str):
     """Build (once per sf_dir per process) a real on-disk DisLog from the
     events fixture and register format('dis')."""
-
-    from ..sources.dis_log import DisLog, create_log_from_events
+    from ..sources.dis_log import create_log_from_events
 
     _register_dis(spark)
-    if sf_dir not in _LOG_CACHE:
-        root = scratch_dir("dis_log_")
-        # MAT_LOG_SEGMENT_ROWS=4000 (was 2000): the r12 addBatch
-        # decomposition (tools/profile_addbatch.py) measured ~25% of the
-        # Python source's warm per-batch cost as per-segment overhead —
-        # halving the file count cut warm addBatch 445 -> 331 ms at ~17k
-        # rows/batch. Segment-granular behaviors (pruning, boundaries,
-        # compaction, merge) keep their own purpose-built logs.
-        create_log_from_events(spark, f"{sf_dir}/events.parquet", root,
-                               segment_rows=MAT_LOG_SEGMENT_ROWS)
-        _LOG_CACHE[sf_dir] = root
-    return DisLog(_LOG_CACHE[sf_dir], "events")
+    # MAT_LOG_SEGMENT_ROWS=4000 (was 2000): the r12 addBatch
+    # decomposition (tools/profile_addbatch.py) measured ~25% of the
+    # Python source's warm per-batch cost as per-segment overhead —
+    # halving the file count cut warm addBatch 445 -> 331 ms at ~17k
+    # rows/batch. Segment-granular behaviors (pruning, boundaries,
+    # compaction, merge) keep their own purpose-built logs.
+    root = _fixture_root("events", sf_dir, lambda root: create_log_from_events(
+        spark, f"{sf_dir}/events.parquet", root,
+        segment_rows=MAT_LOG_SEGMENT_ROWS))
+    return DisLog(root, "events")
 
 
 @register(
@@ -684,8 +713,6 @@ def dis_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.select("key", "value")
 
 
-_SCRAMBLE_LOG_CACHE: dict[str, str] = {}
-
 # Deterministic arrival-order scramble for the late-data gate: reading the
 # log in offset order interleaves 7 strides of the time-ordered event
 # sequence, so after the first rate-limited batch (which contains stride 0
@@ -704,10 +731,12 @@ def _carry_offsets(spark: SparkSession, env: DataFrame,
     (partition, order), ranks locally, and adds the per-physical-
     partition prefix carry — the same machinery the declared two-pass
     rows use, so the harness scales with the fixture. Byte-identity of
-    the produced logs vs the windowed form is pinned by
-    tools/snapshot_logs.py (verified at sf0.01: all 7 materializers
-    bit-identical). Expects a 'partition' column; returns env with
-    'offset' added and the order columns dropped."""
+    the produced logs is pinned by tools/snapshot_logs.py, which covers
+    every fixture log (verified at sf0.01: the 7 windowed materializers
+    bit-identical to this form, and all 11 fixture logs bit-identical
+    after the builders moved onto :func:`_fixture_log`). Expects a
+    'partition' column; returns env with 'offset' added and the order
+    columns dropped."""
     ranked = _two_pass_rank(spark, env, ["partition"], order_cols)
     return (ranked.withColumn("offset", (F.col("rn") - 1).cast("long"))
             .drop("rn", "n", *order_cols))
@@ -724,35 +753,18 @@ def _materialized_scrambled_log(spark: SparkSession, sf_dir: str):
     (batch = offset // per_trigger, no lag split to model), which is what
     lets the oracle recompute the watermark progression declaratively.
     Harness fixture only; production logs stay partitioned."""
-    from ..sources.dis_log import DisLog
     from ..tables import load_events
 
-    _register_dis(spark)
-    if sf_dir not in _SCRAMBLE_LOG_CACHE:
-        root = scratch_dir("dis_latelog_")
-        log = DisLog(root, "late").create(1)
-        events = load_events(spark, sf_dir)
-        env = _carry_offsets(
-            spark,
-            events.select(
-                F.lit(0).cast("int").alias("partition"),
-                (F.col("event_id") % _SCRAMBLE_STRIDES).alias("ord"),
-                "event_id",
-                F.col("user_id").cast("string").alias("key"),
-                F.col("props").alias("value"),
-                F.col("ts").alias("timestamp")),
-            ["ord", "event_id"]).select(*_ENV_COLS)
-        (env.repartition(1, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "late")
-            .option("segmentRows", "500")
-            .mode("append").save())
-        _SCRAMBLE_LOG_CACHE[sf_dir] = root
-    return DisLog(_SCRAMBLE_LOG_CACHE[sf_dir], "late")
-
-
-_ORDERED_LOG_CACHE: dict[str, str] = {}
+    return _fixture_log(
+        spark, sf_dir, "late",
+        lambda: load_events(spark, sf_dir).select(
+            F.lit(0).cast("int").alias("partition"),
+            (F.col("event_id") % _SCRAMBLE_STRIDES).alias("ord"),
+            "event_id",
+            F.col("user_id").cast("string").alias("key"),
+            F.col("props").alias("value"),
+            F.col("ts").alias("timestamp")),
+        ["ord", "event_id"], 1, 500)
 
 
 def _materialized_ordered_log(spark: SparkSession, sf_dir: str):
@@ -763,31 +775,17 @@ def _materialized_ordered_log(spark: SparkSession, sf_dir: str):
     function of the log (batch = offset // per), and (b) time-ordered
     arrival makes watermark behavior provable: nothing is ever late, and
     the per-batch running-max event time is just the batch's last row."""
-    from ..sources.dis_log import DisLog
     from ..tables import load_events
 
-    _register_dis(spark)
-    if sf_dir not in _ORDERED_LOG_CACHE:
-        root = scratch_dir("dis_orderedlog_")
-        DisLog(root, "ordered").create(1)
-        events = load_events(spark, sf_dir)
-        env = _carry_offsets(
-            spark,
-            events.select(
-                F.lit(0).cast("int").alias("partition"),
-                "event_id",
-                F.col("user_id").cast("string").alias("key"),
-                F.col("props").alias("value"),
-                F.col("ts").alias("timestamp")),
-            ["event_id"]).select(*_ENV_COLS)
-        (env.repartition(1, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "ordered")
-            .option("segmentRows", "500")
-            .mode("append").save())
-        _ORDERED_LOG_CACHE[sf_dir] = root
-    return DisLog(_ORDERED_LOG_CACHE[sf_dir], "ordered")
+    return _fixture_log(
+        spark, sf_dir, "ordered",
+        lambda: load_events(spark, sf_dir).select(
+            F.lit(0).cast("int").alias("partition"),
+            "event_id",
+            F.col("user_id").cast("string").alias("key"),
+            F.col("props").alias("value"),
+            F.col("ts").alias("timestamp")),
+        ["event_id"], 1, 500)
 
 
 @register(
@@ -898,8 +896,6 @@ def dis_late_drop_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n")
 
 
-_SCRAMBLE_MP_LOG_CACHE: dict[str, str] = {}
-
 # Partition assignment for the multi-partition late-drop gate: deliberately
 # UNEQUAL counts (ratio 1:2:3 via event_id % 6 -> {0}, {1,2}, {3,4,5}) so
 # the lag-proportional split is non-trivial every trigger — equal lags
@@ -917,35 +913,21 @@ def _materialized_scrambled_multipart_log(spark: SparkSession, sf_dir: str):
     per-partition until-offsets follow the lag-proportional split
     (sources/rate.py), which the oracle re-derives with a recursive CTE.
     Harness fixture only."""
-    from ..sources.dis_log import DisLog
     from ..tables import load_events
 
-    _register_dis(spark)
-    if sf_dir not in _SCRAMBLE_MP_LOG_CACHE:
-        root = scratch_dir("dis_latelog_mp_")
-        DisLog(root, "latemp").create(3)
-        events = load_events(spark, sf_dir)
-        part = (F.when(F.col("event_id") % 6 == 0, 0)
-                 .when(F.col("event_id") % 6 <= 2, 1)
-                 .otherwise(2)).cast("int")
-        env = _carry_offsets(
-            spark,
-            events.select(
-                part.alias("partition"),
-                (F.col("event_id") % _SCRAMBLE_STRIDES).alias("ord"),
-                "event_id",
-                F.col("user_id").cast("string").alias("key"),
-                F.col("props").alias("value"),
-                F.col("ts").alias("timestamp")),
-            ["ord", "event_id"]).select(*_ENV_COLS)
-        (env.repartition(3, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "latemp")
-            .option("segmentRows", "500")
-            .mode("append").save())
-        _SCRAMBLE_MP_LOG_CACHE[sf_dir] = root
-    return DisLog(_SCRAMBLE_MP_LOG_CACHE[sf_dir], "latemp")
+    part = (F.when(F.col("event_id") % 6 == 0, 0)
+             .when(F.col("event_id") % 6 <= 2, 1)
+             .otherwise(2)).cast("int")
+    return _fixture_log(
+        spark, sf_dir, "latemp",
+        lambda: load_events(spark, sf_dir).select(
+            part.alias("partition"),
+            (F.col("event_id") % _SCRAMBLE_STRIDES).alias("ord"),
+            "event_id",
+            F.col("user_id").cast("string").alias("key"),
+            F.col("props").alias("value"),
+            F.col("ts").alias("timestamp")),
+        ["ord", "event_id"], 3, 500)
 
 
 @register(
@@ -1215,11 +1197,9 @@ def dis_join_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     dis_multibatch_join_streamed, so its losslessness argument (no
     match can straddle an eviction) carries over and the batch join
     stays the exact oracle."""
-    import shutil
-    import time as _time
     import uuid
 
-    from ..streaming.drain import drain_available, resume_floor
+    from ..streaming.drain import kill_resume
     from ..streaming.queries import purchase_click_join
 
     log = _materialized_ordered_log(spark, sf_dir)
@@ -1245,48 +1225,11 @@ def dis_join_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .option("checkpointLocation", ckpt)
                 .trigger(**trigger).start())
 
-    # try/finally over all three phases (r6 ADVICE #3): an exception in
-    # any phase must still stop the live query and reclaim the checkpoint
-    # — matching the sibling gates' (e.g. multipart) cleanup discipline.
-    q = None
-    try:
-        q = start({"availableNow": True}, rate_limited=True)
-        if not q.awaitTermination(120):
-            raise TimeoutError("join-restart phase 1 did not terminate")
-        q = start({"processingTime": "0 seconds"}, rate_limited=True)
-        deadline = _time.monotonic() + 120
-        try:
-            while _time.monotonic() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                if any(p["numInputRows"] > 0 for p in q.recentProgress):
-                    break
-                _time.sleep(0.05)
-            else:
-                raise TimeoutError("join-restart phase 2 made no progress")
-        finally:
-            q.stop()
-            q.awaitTermination(60)
-        # Count floor derived from the checkpoint WAL (r11 verdict #5):
-        # what phases 1-2 actually committed is nondeterministic, but it
-        # is RECORDED — the resume must consume at least the uncommitted
-        # remainder before idling. The self-join plans two source
-        # instances (numInputRows counts both, and the WAL carries both
-        # sources' offsets), so the total doubles and the WAL sum
-        # already matches that accounting.
-        floor = resume_floor(ckpt, 2 * total)
-        q = start({"processingTime": "0 seconds"}, rate_limited=False)
-        drain_available(q, timeout_seconds=180, expected_rows=floor)
-        final = spark.read.parquet(out)
-    finally:
-        try:
-            if q is not None and q.isActive:
-                q.stop()
-                q.awaitTermination(60)
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return final.select("p_key", "p_offset", "c_offset")
+    # The self-join plans two source instances (numInputRows counts
+    # both, and the WAL carries both sources' offsets), so the resume
+    # floor's total doubles and the WAL sum already matches it.
+    kill_resume(start, ckpt, 2 * total, "join-restart")
+    return spark.read.parquet(out).select("p_key", "p_offset", "c_offset")
 
 
 @register(
@@ -1425,9 +1368,6 @@ def dis_chained_stateful_streamed(spark: SparkSession,
                      .alias("window_start"), "n"))
 
 
-_DOCS_LOG_CACHE: dict[str, str] = {}
-
-
 def _materialized_docs_log(spark: SparkSession, sf_dir: str):
     """An on-disk DisLog carrying the DOCUMENTS corpus (key = doc_id,
     value = text, partition = doc_id % 4, synthetic deterministic event
@@ -1435,34 +1375,18 @@ def _materialized_docs_log(spark: SparkSession, sf_dir: str):
     streaming connector, which is exactly the 100 TB ingestion shape:
     documents arrive on a partitioned log and quality/token analysis
     runs as the stream is consumed, not as a later batch pass."""
-    from ..sources.dis_log import DisLog
-    from ..tables import load
-
-    _register_dis(spark)
-    if sf_dir not in _DOCS_LOG_CACHE:
-        root = scratch_dir("dis_docslog_")
-        DisLog(root, "docs").create(DEFAULT_NUM_PARTITIONS)
-        docs = load(spark, sf_dir, "documents")
-        part = (F.col("doc_id") % DEFAULT_NUM_PARTITIONS).cast("int")
-        env = _carry_offsets(
-            spark,
-            docs.select(
-                part.alias("partition"),
-                "doc_id",
-                F.col("doc_id").cast("string").alias("key"),
-                F.col("text").alias("value"),
-                (F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
-                 + F.make_interval(secs=F.col("doc_id").cast("double")))
-                .alias("timestamp")),
-            ["doc_id"]).select(*_ENV_COLS)
-        (env.repartition(DEFAULT_NUM_PARTITIONS, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "docs")
-            .option("segmentRows", "500")
-            .mode("append").save())
-        _DOCS_LOG_CACHE[sf_dir] = root
-    return DisLog(_DOCS_LOG_CACHE[sf_dir], "docs")
+    part = (F.col("doc_id") % DEFAULT_NUM_PARTITIONS).cast("int")
+    return _fixture_log(
+        spark, sf_dir, "docs",
+        lambda: load(spark, sf_dir, "documents").select(
+            part.alias("partition"),
+            "doc_id",
+            F.col("doc_id").cast("string").alias("key"),
+            F.col("text").alias("value"),
+            (F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+             + F.make_interval(secs=F.col("doc_id").cast("double")))
+            .alias("timestamp")),
+        ["doc_id"], DEFAULT_NUM_PARTITIONS, 500)
 
 
 @register(
@@ -1530,7 +1454,6 @@ def dis_docs_curation_sink_streamed(spark: SparkSession,
     import shutil
 
     from ..functions.portable import tokens
-    from ..sources.dis_log import DisLog
 
     log = _materialized_docs_log(spark, sf_dir)
     dest_root = scratch_dir("dis_curated_")
@@ -1991,14 +1914,13 @@ def dis_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _restart_drain(spark: SparkSession, sf_dir: str, build,
                    prefix: str) -> DataFrame:
-    """The 3-run kill/resume harness documented on dis_restart_streamed:
-    ``build`` maps the streaming envelope to the stateful query; the
-    final complete-mode memory table is returned for the oracle."""
-    import shutil
-    import time as _time
+    """The kill/resume protocol (streaming/drain.kill_resume) over the
+    shared events log: ``build`` maps the streaming envelope to the
+    stateful query; the final complete-mode memory table is returned for
+    the oracle."""
     import uuid
 
-    from ..streaming.drain import drain_available, resume_floor
+    from ..streaming.drain import kill_resume
 
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
@@ -2017,37 +1939,7 @@ def _restart_drain(spark: SparkSession, sf_dir: str, build,
                 .option("checkpointLocation", ckpt)
                 .trigger(**trigger).start())
 
-    try:
-        # run 1: one clamped batch, clean termination mid-backlog
-        q = start({"availableNow": True}, rate_limited=True)
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("restart phase 1 did not terminate")
-        # run 2: resumed, then killed after >=1 data batch commits
-        q = start({"processingTime": "0 seconds"}, rate_limited=True)
-        deadline = _time.monotonic() + 120
-        try:
-            while _time.monotonic() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                if any(p["numInputRows"] > 0 for p in q.recentProgress):
-                    break
-                _time.sleep(0.05)
-            else:
-                raise TimeoutError("restart phase 2 made no progress")
-        finally:
-            q.stop()
-            q.awaitTermination(60)
-        # run 3: resumed unthrottled, drained to idle (see docstring for
-        # why this is not availableNow). Count floor from the checkpoint
-        # WAL (r11 verdict #5): runs 1-2 committed a nondeterministic
-        # prefix, but the WAL records it — the resume must consume at
-        # least the remainder before the idle tail may stop it.
-        floor = resume_floor(ckpt, total)
-        q = start({"processingTime": "0 seconds"}, rate_limited=False)
-        drain_available(q, timeout_seconds=180, expected_rows=floor)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    kill_resume(start, ckpt, total, prefix)
     return spark.table(name)
 
 
@@ -2161,8 +2053,6 @@ def dis_metadata_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------- multi-stream subscription
 
-_MULTI_LOG_CACHE: dict[str, str] = {}
-
 MULTI_STREAM_SPLIT = (("events_a", 0), ("events_b", 1))
 
 
@@ -2170,27 +2060,22 @@ def _materialized_multi_log(spark: SparkSession, sf_dir: str) -> str:
     """Two physical streams under one log root (events_a = even event_id,
     events_b = odd), each a real on-disk DisLog written through the
     format('dis') explicit-offset writer."""
-
-    from ..sources.dis_log import DisLog
     from ..tables import load_events
 
     _register_dis(spark)
-    if sf_dir not in _MULTI_LOG_CACHE:
-        root = scratch_dir("dis_multilog_")
+
+    def build(root: str) -> None:
         events = load_events(spark, sf_dir)
         for stream, residue in MULTI_STREAM_SPLIT:
             DisLog(root, stream).create(DEFAULT_NUM_PARTITIONS)
             env = envelope(events.where(F.col("event_id") % 2 == residue),
                            stream, DEFAULT_NUM_PARTITIONS)
-            (env.select("partition", "offset", "key", "value", "timestamp")
-                .repartition(DEFAULT_NUM_PARTITIONS, "partition")
-                .sortWithinPartitions("partition", "offset")
-                .write.format("dis")
-                .option("path", root).option("stream", stream)
-                .option("segmentRows", "2000")
-                .mode("append").save())
-        _MULTI_LOG_CACHE[sf_dir] = root
-    return _MULTI_LOG_CACHE[sf_dir]
+            write_with_offsets(
+                env.select("partition", "offset", "key", "value",
+                           "timestamp"),
+                root, stream, DEFAULT_NUM_PARTITIONS, 2000)
+
+    return _fixture_root("multi", sf_dir, build)
 
 
 def _split_envelope_sql(stream: str, residue: int) -> str:
@@ -2356,8 +2241,6 @@ def dis_producer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     to task scheduling), so they are deliberately NOT projected; content
     and routing are what the producer contract guarantees."""
 
-    from ..sources.dis_log import DisLog
-
     _register_dis(spark)
     root = scratch_dir("dis_producer_")
     DisLog(root, "produced").create(DEFAULT_NUM_PARTITIONS)
@@ -2393,7 +2276,6 @@ def dis_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (producer-mode tail append) and deliberately not projected; the
     forwarded partition column pins explicit routing."""
 
-    from ..sources.dis_log import DisLog
     from ..streaming.drain import drain_available
 
     log = _materialized_log(spark, sf_dir)
@@ -2537,9 +2419,6 @@ def dis_boundary_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("partition", "offset", "key", "value")
 
 
-_COMPACT_LOG_CACHE: dict[str, str] = {}
-
-
 @register(
     "dis_compacted_read",
     oracle=f"""
@@ -2562,14 +2441,11 @@ def dis_compacted_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.dis_log import compact_log, create_log_from_events
 
-    if sf_dir not in _COMPACT_LOG_CACHE:
-        root = scratch_dir("dis_compact_")
-        log = create_log_from_events(spark, f"{sf_dir}/events.parquet",
-                                     root, segment_rows=2000)
-        compact_log(log)
-        _COMPACT_LOG_CACHE[sf_dir] = root
+    root = _fixture_root("compacted", sf_dir, lambda root: compact_log(
+        create_log_from_events(spark, f"{sf_dir}/events.parquet", root,
+                               segment_rows=2000)))
     df = (spark.read.format("dis")
-          .option("path", _COMPACT_LOG_CACHE[sf_dir])
+          .option("path", root)
           .option("stream", "events")
           .option("allowNonConsecutiveOffsets", "true")
           .load())
@@ -2597,11 +2473,7 @@ def dis_sink_restart_roundtrip(spark: SparkSession,
     wholesale, crashed txn's tail segments rolled back,
     DisStreamWriter.commit); any slip shows up as a missing or doubled
     record in the destination read-back vs the envelope SQL."""
-    import shutil
-    import time as _time
-
-    from ..sources.dis_log import DisLog
-    from ..streaming.drain import drain_available, resume_floor
+    from ..streaming.drain import kill_resume
 
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
@@ -2624,33 +2496,7 @@ def dis_sink_restart_roundtrip(spark: SparkSession,
                 .option("checkpointLocation", ckpt)
                 .trigger(**trigger).start())
 
-    try:
-        q = start({"availableNow": True}, rate_limited=True)
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("sink restart phase 1 did not terminate")
-        q = start({"processingTime": "0 seconds"}, rate_limited=True)
-        deadline = _time.monotonic() + 120
-        try:
-            while _time.monotonic() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                if any(p["numInputRows"] > 0 for p in q.recentProgress):
-                    break
-                _time.sleep(0.05)
-            else:
-                raise TimeoutError("sink restart phase 2 made no progress")
-        finally:
-            q.stop()
-            q.awaitTermination(60)
-        # Count floor from the checkpoint WAL (r11 verdict #5): the kill
-        # point is nondeterministic but recorded — the resume must
-        # consume at least the uncommitted remainder before idling.
-        floor = resume_floor(ckpt, total)
-        q = start({"processingTime": "0 seconds"}, rate_limited=False)
-        drain_available(q, timeout_seconds=180, expected_rows=floor)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    kill_resume(start, ckpt, total, "sink restart")
     df = (spark.read.format("dis")
           .option("path", dest_root).option("stream", "copy").load())
     return df.select(
@@ -2678,8 +2524,6 @@ def dis_restart_recovery_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by the oracle twin, so this row exists purely to catch
     recovery-cost regressions round-over-round."""
     import shutil
-
-    from ..sources.dis_log import DisLog
 
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
@@ -3155,10 +2999,11 @@ def dis_stream_dedup_tws_streamed(spark: SparkSession,
     streaming/stateful.dedup_first_seen_tws: state is one small entry
     per distinct hash, TTL or a Bloom front-stage bounds it at 100 TB."""
     import shutil
-    import time as _time
     import uuid
 
-    from ..streaming.drain import drain_available, resume_floor
+    from ..streaming.drain import (
+        await_progress, drain_available, resume_floor, stop_query,
+    )
     from ..streaming.stateful import dedup_first_seen_tws
 
     log = _materialized_log(spark, sf_dir)
@@ -3183,16 +3028,8 @@ def dis_stream_dedup_tws_streamed(spark: SparkSession,
     with _rocksdb_state(spark):
         try:
             q = start()
-            deadline = _time.monotonic() + 120
-            while _time.monotonic() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                if any(p["numInputRows"] > 0 for p in q.recentProgress):
-                    break                       # kill mid-backlog
-                _time.sleep(0.05)
-            else:
-                raise TimeoutError("stream-dedup phase 1 made no progress")
-            q.stop()
+            await_progress(q, "stream-dedup phase 1")
+            q.stop()                            # kill mid-backlog
             q.awaitTermination(60)
             batches1 = sum(1 for p in q.recentProgress
                            if p["numInputRows"] > 0)
@@ -3209,17 +3046,11 @@ def dis_stream_dedup_tws_streamed(spark: SparkSession,
                     "batches; the multi-batch gate requires >= 3")
             final = spark.read.parquet(out)
         finally:
-            try:
-                if q is not None and q.isActive:
-                    q.stop()
-                    q.awaitTermination(60)
-            except Exception:
-                pass
+            stop_query(q)
             shutil.rmtree(ckpt, ignore_errors=True)
     return final.select("vh", "value")
 
 
-_ANN_LOG_CACHE: dict[str, str] = {}
 _ANN_LOG_PARTS = 3
 
 
@@ -3229,34 +3060,19 @@ def _materialized_embeddings_log(spark: SparkSession, sf_dir: str):
     once per (process, sf_dir); value = to_json(vec_id, e) (float->double
     cast is exact, and Jackson prints shortest-round-trip doubles, so the
     payload parses back bit-identical)."""
-    from ..sources.dis_log import DisLog
-
     from .similarity import ann_ingest_split
 
-    _register_dis(spark)
-    if sf_dir not in _ANN_LOG_CACHE:
-        root = scratch_dir("dis_emb_log_")
-        _, streamed = ann_ingest_split(spark, sf_dir)
-        part = (F.col("vec_id") % _ANN_LOG_PARTS).cast("int")
-        env = _carry_offsets(
-            spark,
-            streamed.select(
-                part.alias("partition"),
-                "vec_id",
-                F.col("vec_id").cast("string").alias("key"),
-                F.to_json(F.struct("vec_id", "e")).alias("value"),
-                F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
-                 .alias("timestamp")),
-            ["vec_id"]).select(*_ENV_COLS)
-        DisLog(root, "embeddings").create(_ANN_LOG_PARTS)
-        (env.repartition(_ANN_LOG_PARTS, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "embeddings")
-            .option("segmentRows", "16")
-            .mode("append").save())
-        _ANN_LOG_CACHE[sf_dir] = root
-    return DisLog(_ANN_LOG_CACHE[sf_dir], "embeddings")
+    part = (F.col("vec_id") % _ANN_LOG_PARTS).cast("int")
+    return _fixture_log(
+        spark, sf_dir, "embeddings",
+        lambda: ann_ingest_split(spark, sf_dir)[1].select(
+            part.alias("partition"),
+            "vec_id",
+            F.col("vec_id").cast("string").alias("key"),
+            F.to_json(F.struct("vec_id", "e")).alias("value"),
+            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+             .alias("timestamp")),
+        ["vec_id"], _ANN_LOG_PARTS, 16)
 
 
 @register(
@@ -3390,11 +3206,9 @@ def dis_tws_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
        data batch commits (>= 2 total before the final resume);
     3. unthrottled drain to idle under the SAME RocksDB provider.
     """
-    import shutil
-    import time as _time
     import uuid
 
-    from ..streaming.drain import drain_available, resume_floor
+    from ..streaming.drain import kill_resume
     from ..streaming.stateful import cdc_changes_tws
 
     log = _materialized_log(spark, sf_dir)
@@ -3416,43 +3230,10 @@ def dis_tws_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .option("checkpointLocation", ckpt)
                 .trigger(**trigger).start())
 
-    q = None
-    try:
-        with _rocksdb_state(spark):
-            q = start({"availableNow": True}, rate_limited=True)
-            if not q.awaitTermination(120):
-                raise TimeoutError("tws-restart phase 1 did not terminate")
-            q = start({"processingTime": "0 seconds"}, rate_limited=True)
-            deadline = _time.monotonic() + 120
-            try:
-                while _time.monotonic() < deadline:
-                    if q.exception() is not None:
-                        raise q.exception()
-                    if any(p["numInputRows"] > 0
-                           for p in q.recentProgress):
-                        break
-                    _time.sleep(0.05)
-                else:
-                    raise TimeoutError("tws-restart phase 2: no progress")
-            finally:
-                q.stop()               # the mid-drain kill
-                q.awaitTermination(60)
-            # Count floor from the checkpoint WAL (r11 verdict #5): the
-            # kill point is nondeterministic but recorded — the resume
-            # must consume at least the uncommitted remainder.
-            floor = resume_floor(ckpt, total)
-            q = start({"processingTime": "0 seconds"}, rate_limited=False)
-            drain_available(q, timeout_seconds=180, expected_rows=floor)
-        final = spark.read.parquet(out)
-    finally:
-        try:
-            if q is not None and q.isActive:
-                q.stop()
-                q.awaitTermination(60)
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return final.select("key", "offset", "prev_value", "value")
+    with _rocksdb_state(spark):
+        kill_resume(start, ckpt, total, "tws-restart")
+    return (spark.read.parquet(out)
+            .select("key", "offset", "prev_value", "value"))
 
 
 # Default hash-bucket count for the incremental upsert view. A PARAMETER
@@ -3884,7 +3665,6 @@ def _register_ann_retrain():
 _register_ann_retrain()
 
 
-_ANN_QUERY_LOG_CACHE: dict[str, str] = {}
 _ANN_QUERY_LOG_PARTS = 2
 
 
@@ -3893,41 +3673,26 @@ def _materialized_ann_query_log(spark: SparkSession, sf_dir: str):
     JSON payloads — the arrival stream for the query-serving gate. Tiny
     by construction (queries, not corpus); small segments so a rate
     limit spreads it over several micro-batches."""
-    from ..sources.dis_log import DisLog
-
     from .similarity import N_QUERIES
 
-    _register_dis(spark)
-    if sf_dir not in _ANN_QUERY_LOG_CACHE:
-        from ..tables import load
-
-        root = scratch_dir("dis_annq_log_")
+    def rows():
         emb = load(spark, sf_dir, "embeddings")
         q = (emb.where(F.col("vec_id") < N_QUERIES)
              .select("vec_id",
                      F.transform("embedding", lambda x: x.cast("double"))
                      .alias("e")))
-        part = (F.col("vec_id") % _ANN_QUERY_LOG_PARTS).cast("int")
-        env = _carry_offsets(
-            spark,
-            q.select(
-                part.alias("partition"),
-                "vec_id",
-                F.col("vec_id").cast("string").alias("key"),
-                F.to_json(F.struct(F.col("vec_id").alias("query_id"),
-                                   F.col("e").alias("qe"))).alias("value"),
-                F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
-                 .alias("timestamp")),
-            ["vec_id"]).select(*_ENV_COLS)
-        DisLog(root, "annq").create(_ANN_QUERY_LOG_PARTS)
-        (env.repartition(_ANN_QUERY_LOG_PARTS, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "annq")
-            .option("segmentRows", "4")
-            .mode("append").save())
-        _ANN_QUERY_LOG_CACHE[sf_dir] = root
-    return DisLog(_ANN_QUERY_LOG_CACHE[sf_dir], "annq")
+        return q.select(
+            (F.col("vec_id") % _ANN_QUERY_LOG_PARTS).cast("int")
+            .alias("partition"),
+            "vec_id",
+            F.col("vec_id").cast("string").alias("key"),
+            F.to_json(F.struct(F.col("vec_id").alias("query_id"),
+                               F.col("e").alias("qe"))).alias("value"),
+            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+             .alias("timestamp"))
+
+    return _fixture_log(spark, sf_dir, "annq", rows, ["vec_id"],
+                        _ANN_QUERY_LOG_PARTS, 4)
 
 
 def _register_ann_query():
@@ -4044,7 +3809,6 @@ def dis_fanout_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     txn idempotence is what upgrades its at-least-once to exactly-once."""
     import uuid
 
-    from ..sources.dis_log import DisLog
     from ..streaming.drain import drain_available
     from ..functions.portable import portable_hash as phash
 
@@ -4191,11 +3955,9 @@ def dis_state_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final emitted session set must equal dis_state_timeout_streamed's
     oracle exactly: a lost open session, a re-emitted closed one, or a
     timeout that failed to re-arm after restart each breaks the hash."""
-    import shutil
-    import time as _time
     import uuid
 
-    from ..streaming.drain import drain_available, resume_floor
+    from ..streaming.drain import kill_resume
     from ..streaming.stateful import sessions_with_timeout
 
     log = _materialized_ordered_log(spark, sf_dir)
@@ -4217,32 +3979,9 @@ def dis_state_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .option("checkpointLocation", ckpt)
                 .trigger(**trigger).start())
 
-    q = start({"availableNow": True}, rate_limited=True)
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("state-restart phase 1 did not terminate")
-    q = start({"processingTime": "0 seconds"}, rate_limited=True)
-    deadline = _time.monotonic() + 120
-    try:
-        while _time.monotonic() < deadline:
-            if q.exception() is not None:
-                raise q.exception()
-            if any(p["numInputRows"] > 0 for p in q.recentProgress):
-                break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError("state-restart phase 2 made no progress")
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    # Count floor from the checkpoint WAL (r11 verdict #5): the kill
-    # point is nondeterministic but recorded — the resume must consume
-    # at least the uncommitted remainder before the idle tail (which
-    # stays required: trailing session timeouts fire on no-data batches).
-    floor = resume_floor(ckpt, total)
-    q = start({"processingTime": "0 seconds"}, rate_limited=False)
-    drain_available(q, timeout_seconds=180, expected_rows=floor)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    # The resume's idle tail stays required after its count floor:
+    # trailing session timeouts fire on no-data batches.
+    kill_resume(start, ckpt, total, "state-restart")
     return (spark.read.parquet(out)
             .select("key", "session_start", "session_last", "n_events"))
 
@@ -4713,10 +4452,10 @@ def dis_tail_subscribe_streamed(spark: SparkSession,
     phase-2 record missed, breaks the hash. Producer-mode offsets are
     commit-order-dependent and deliberately not projected
     (dis_producer_roundtrip's contract)."""
-    import time as _time
+    import shutil
     import uuid
 
-    from ..sources.dis_log import DisLog
+    from ..streaming.drain import await_progress, drain_available, stop_query
     from ..tables import load_events
 
     _register_dis(spark)
@@ -4747,23 +4486,15 @@ def dis_tail_subscribe_streamed(spark: SparkSession,
          .option("checkpointLocation", ckpt)
          .trigger(processingTime="0 seconds").start())
     try:
-        deadline = _time.monotonic() + 60
-        while _time.monotonic() < deadline:
-            if q.exception() is not None:
-                raise q.exception()
-            if q.recentProgress:
-                break              # tail position captured
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError("tail subscribe never captured a position")
+        # the first progress event proves the tail position was captured
+        await_progress(q, "tail subscribe", timeout_seconds=60, data=False)
         produce(phase2)
-        from ..streaming.drain import drain_available
         # count-polling target: the latest-start subscription must see
         # exactly the phase-2 slice
         drain_available(q, timeout_seconds=120,
                         expected_rows=phase2.count())
     finally:
-        import shutil
+        stop_query(q)
         shutil.rmtree(ckpt, ignore_errors=True)
     return (spark.table(name)
             .select("partition", "key", "value",
@@ -5190,11 +4921,10 @@ def dis_partition_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice on the old ones, or started at the wrong offset breaks the
     hash."""
     import shutil
-    import time as _time
     import uuid
 
-    from ..sources.dis_log import DisLog, create_log_from_events
-    from ..streaming.drain import drain_available
+    from ..sources.dis_log import create_log_from_events
+    from ..streaming.drain import await_progress, drain_available, stop_query
     from ..tables import load_events
 
     _register_dis(spark)
@@ -5212,15 +4942,9 @@ def dis_partition_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", ckpt)
          .trigger(processingTime="0 seconds").start())
     try:
-        deadline = _time.monotonic() + 60
-        while _time.monotonic() < deadline:
-            if q.exception() is not None:
-                raise q.exception()
-            if q.recentProgress:
-                break              # consumption underway pre-add
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError("partition-add gate: no initial progress")
+        # consumption is underway before the partition is added
+        await_progress(q, "partition-add gate", timeout_seconds=60,
+                       data=False)
         total0 = sum(log.latest_offsets().values())
         new_p = log.add_partitions(1) - 1
         events = load_events(spark, sf_dir)
@@ -5234,15 +4958,11 @@ def dis_partition_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("props").alias("value"),
                     F.col("ts").alias("timestamp")),
             ["event_id"]).select(*_ENV_COLS)
-        (env.repartition(1, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "events")
-            .option("segmentRows", "2000")
-            .mode("append").save())
+        write_with_offsets(env, root, "events", 1, 2000)
         drain_available(q, timeout_seconds=180,
                         expected_rows=total0 + n_aux)
     finally:
+        stop_query(q)
         shutil.rmtree(ckpt, ignore_errors=True)
     return (spark.table(name)
             .select("partition", "offset", "key", "value",
@@ -5280,11 +5000,10 @@ def dis_pattern_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching alone (the batch reader's semantics, the r8 'partial')
     cannot pass."""
     import shutil
-    import time as _time
     import uuid
 
-    from ..sources.dis_log import DisLog, create_log_from_events
-    from ..streaming.drain import drain_available
+    from ..sources.dis_log import create_log_from_events
+    from ..streaming.drain import await_progress, drain_available, stop_query
     from ..tables import load_events
 
     _register_dis(spark)
@@ -5303,15 +5022,8 @@ def dis_pattern_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", ckpt)
          .trigger(processingTime="0 seconds").start())
     try:
-        deadline = _time.monotonic() + 60
-        while _time.monotonic() < deadline:
-            if q.exception() is not None:
-                raise q.exception()
-            if q.recentProgress:
-                break              # consumption underway pre-create
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError("pattern gate: no initial progress")
+        # consumption is underway before the second stream exists
+        await_progress(q, "pattern gate", timeout_seconds=60, data=False)
         total0 = sum(DisLog(root, "events").latest_offsets().values())
         DisLog(root, "events_aux").create(1)
         events = load_events(spark, sf_dir)
@@ -5325,21 +5037,11 @@ def dis_pattern_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("props").alias("value"),
                     F.col("ts").alias("timestamp")),
             ["event_id"]).select(*_ENV_COLS)
-        (env.repartition(1, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "events_aux")
-            .option("segmentRows", "2000")
-            .mode("append").save())
+        write_with_offsets(env, root, "events_aux", 1, 2000)
         drain_available(q, timeout_seconds=180,
                         expected_rows=total0 + n_aux)
     finally:
-        try:
-            if q.isActive:
-                q.stop()
-                q.awaitTermination(30)
-        except Exception:
-            pass
+        stop_query(q)
         shutil.rmtree(ckpt, ignore_errors=True)
     return (spark.table(name)
             .select("stream", "partition", "offset", "key", "value",
@@ -5403,7 +5105,7 @@ def dis_pattern_revoke_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
     import uuid
 
-    from ..sources.dis_log import DisLog
+    from ..streaming.drain import stop_query
     from ..tables import load_events
 
     _register_dis(spark)
@@ -5423,21 +5125,15 @@ def dis_pattern_revoke_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("offset", F.col("offset") + F.lit(base_offset)) \
             .select(*_ENV_COLS)
 
-    def _write(env, stream):
-        (env.repartition(1, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", stream)
-            .option("segmentRows", "2000")
-            .mode("append").save())
-
     n_m1 = events.where(F.col("event_id") % 2 == 0).count()
     n_m2 = events.where(F.col("event_id") % 2 == 1).count()
     n_aux = events.where(F.col("event_id") % 7 == 0).count()
     DisLog(root, "revk_main").create(1)
     DisLog(root, "revk_aux").create(1)
-    _write(_half_env(F.col("event_id") % 2 == 0, 0), "revk_main")
-    _write(_half_env(F.col("event_id") % 7 == 0, 0), "revk_aux")
+    write_with_offsets(_half_env(F.col("event_id") % 2 == 0, 0), root,
+                       "revk_main", 1, 2000)
+    write_with_offsets(_half_env(F.col("event_id") % 7 == 0, 0), root,
+                       "revk_aux", 1, 2000)
 
     name = f"revk_{uuid.uuid4().hex[:8]}"
     ckpt = scratch_dir("revk_ckpt_")
@@ -5464,15 +5160,11 @@ def dis_pattern_revoke_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         _await_rows(n_m1 + n_aux, "phase 1 (both streams)")
         shutil.rmtree(os.path.join(root, "revk_aux"))   # the revoke
-        _write(_half_env(F.col("event_id") % 2 == 1, n_m1), "revk_main")
+        write_with_offsets(_half_env(F.col("event_id") % 2 == 1, n_m1),
+                           root, "revk_main", 1, 2000)
         _await_rows(n_m1 + n_m2 + n_aux, "phase 3 (post-revoke main)")
     finally:
-        try:
-            if q.isActive:
-                q.stop()
-                q.awaitTermination(30)
-        except Exception:
-            pass
+        stop_query(q)
         shutil.rmtree(ckpt, ignore_errors=True)
     return (spark.table(name)
             .select("stream", "partition", "offset", "key", "value",
@@ -6986,41 +6678,24 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.round(z, 9) + 0.0).alias("z")))
 
 
-_ZVALUE_LOG_CACHE: dict[str, str] = {}
-
-
 def _materialized_zvalue_log(spark: SparkSession, sf_dir: str):
     """Single-partition strict event-time DisLog (the
     _materialized_ordered_log shape) whose value is the event metric
     snapped ONCE to DECIMAL(18,4) and rendered as its exact decimal
     string — the wire format that lets downstream stateful consumers
     (zscore_gate_tws) recover the bit-exact decimal, keyed by user."""
-    from ..sources.dis_log import DisLog
     from ..tables import load_events
 
-    _register_dis(spark)
-    if sf_dir not in _ZVALUE_LOG_CACHE:
-        root = scratch_dir("dis_zvaluelog_")
-        DisLog(root, "zvalue").create(1)
-        events = load_events(spark, sf_dir)
-        env = _carry_offsets(
-            spark,
-            events.select(
-                F.lit(0).cast("int").alias("partition"),
-                "event_id",
-                F.col("user_id").cast("string").alias("key"),
-                F.col("value").cast("decimal(18,4)").cast("string")
-                 .alias("value"),
-                F.col("ts").alias("timestamp")),
-            ["event_id"]).select(*_ENV_COLS)
-        (env.repartition(1, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "zvalue")
-            .option("segmentRows", "500")
-            .mode("append").save())
-        _ZVALUE_LOG_CACHE[sf_dir] = root
-    return DisLog(_ZVALUE_LOG_CACHE[sf_dir], "zvalue")
+    return _fixture_log(
+        spark, sf_dir, "zvalue",
+        lambda: load_events(spark, sf_dir).select(
+            F.lit(0).cast("int").alias("partition"),
+            "event_id",
+            F.col("user_id").cast("string").alias("key"),
+            F.col("value").cast("decimal(18,4)").cast("string")
+             .alias("value"),
+            F.col("ts").alias("timestamp")),
+        ["event_id"], 1, 500)
 
 
 @register(
@@ -7303,9 +6978,6 @@ def dis_topk_tws_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "top4", "top5"))
 
 
-_TYPED_VALUE_LOG_CACHE: dict[str, str] = {}
-
-
 def _materialized_typed_value_log(spark: SparkSession, sf_dir: str):
     """Single-partition strict id-ordered DisLog carrying the LATE HALF
     of the event table (event_id above the id midpoint) keyed by
@@ -7313,36 +6985,24 @@ def _materialized_typed_value_log(spark: SparkSession, sf_dir: str):
     exact decimal string, timestamp = the event's NTZ ts — the "live
     traffic" feed the PSI drift gate scores against the early-half
     reference profile (the zvalue-log wire discipline, different key)."""
-    from ..sources.dis_log import DisLog
     from ..tables import load_events
 
-    _register_dis(spark)
-    if sf_dir not in _TYPED_VALUE_LOG_CACHE:
-        root = scratch_dir("dis_typedlog_")
-        DisLog(root, "typedvalue").create(1)
+    def rows():
         events = load_events(spark, sf_dir)
         ids = events.agg(F.min("event_id").alias("mn"),
                          F.max("event_id").alias("mx"))
         late = (events.crossJoin(F.broadcast(ids))
                 .where(F.col("event_id") > F.expr("(mn + mx) div 2")))
-        env = _carry_offsets(
-            spark,
-            late.select(
-                F.lit(0).cast("int").alias("partition"),
-                "event_id",
-                F.col("event_type").alias("key"),
-                F.col("value").cast("decimal(18,4)").cast("string")
-                 .alias("value"),
-                F.col("ts").alias("timestamp")),
-            ["event_id"]).select(*_ENV_COLS)
-        (env.repartition(1, "partition")
-            .sortWithinPartitions("partition", "offset")
-            .write.format("dis")
-            .option("path", root).option("stream", "typedvalue")
-            .option("segmentRows", "500")
-            .mode("append").save())
-        _TYPED_VALUE_LOG_CACHE[sf_dir] = root
-    return DisLog(_TYPED_VALUE_LOG_CACHE[sf_dir], "typedvalue")
+        return late.select(
+            F.lit(0).cast("int").alias("partition"),
+            "event_id",
+            F.col("event_type").alias("key"),
+            F.col("value").cast("decimal(18,4)").cast("string")
+             .alias("value"),
+            F.col("ts").alias("timestamp"))
+
+    return _fixture_log(spark, sf_dir, "typedvalue", rows, ["event_id"],
+                        1, 500)
 
 
 def _psi_reference(spark: SparkSession, sf_dir: str):
@@ -7588,10 +7248,7 @@ def dis_psi_drift_restart_streamed(spark: SparkSession,
     directories, the final board per cell is its max-n_cur emission,
     scored by the SAME broadcast-reference PSI tail and hash-matched
     against the SAME batch oracle as the live gate."""
-    import shutil
-    import time as _time
-
-    from ..streaming.drain import drain_available, resume_floor
+    from ..streaming.drain import kill_resume
     from ..streaming.stateful import psi_gate_tws
 
     ref_long, edges = _psi_reference(spark, sf_dir)
@@ -7620,41 +7277,9 @@ def dis_psi_drift_restart_streamed(spark: SparkSession,
                 .option("checkpointLocation", ckpt)
                 .trigger(**trigger).start())
 
-    q = None
-    try:
-        with _rocksdb_state(spark):
-            q = start({"availableNow": True}, rate_limited=True)
-            if not q.awaitTermination(120):
-                raise TimeoutError("psi-restart phase 1 did not terminate")
-            q = start({"processingTime": "0 seconds"}, rate_limited=True)
-            deadline = _time.monotonic() + 120
-            try:
-                while _time.monotonic() < deadline:
-                    if q.exception() is not None:
-                        raise q.exception()
-                    if any(p["numInputRows"] > 0
-                           for p in q.recentProgress):
-                        break
-                    _time.sleep(0.05)
-                else:
-                    raise TimeoutError("psi-restart phase 2: no progress")
-            finally:
-                q.stop()               # the mid-drain kill
-                q.awaitTermination(60)
-            floor = resume_floor(ckpt, total)
-            q = start({"processingTime": "0 seconds"},
-                      rate_limited=False)
-            drain_available(q, timeout_seconds=180, expected_rows=floor)
-        board = spark.read.parquet(out)
-    finally:
-        try:
-            if q is not None and q.isActive:
-                q.stop()
-                q.awaitTermination(60)
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return _psi_score_board(board, ref_long)
+    with _rocksdb_state(spark):
+        kill_resume(start, ckpt, total, "psi-restart")
+    return _psi_score_board(spark.read.parquet(out), ref_long)
 
 
 def _sample_tws_oracle() -> str:
@@ -7758,10 +7383,7 @@ def dis_sample_restart_streamed(spark: SparkSession,
     update-mode gate), and the declared result is each (key, rank)'s
     final-board row, hash-matched against the SAME batch bottom-k
     oracle as the live gate."""
-    import shutil
-    import time as _time
-
-    from ..streaming.drain import drain_available, resume_floor
+    from ..streaming.drain import kill_resume
     from ..streaming.stateful import sample_gate_tws
 
     log = _materialized_typed_value_log(spark, sf_dir)
@@ -7784,45 +7406,9 @@ def dis_sample_restart_streamed(spark: SparkSession,
                 .option("checkpointLocation", ckpt)
                 .trigger(**trigger).start())
 
-    q = None
-    try:
-        with _rocksdb_state(spark):
-            q = start({"availableNow": True}, rate_limited=True)
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "sample-restart phase 1 did not terminate")
-            q = start({"processingTime": "0 seconds"}, rate_limited=True)
-            deadline = _time.monotonic() + 120
-            try:
-                while _time.monotonic() < deadline:
-                    if q.exception() is not None:
-                        raise q.exception()
-                    if any(p["numInputRows"] > 0
-                           for p in q.recentProgress):
-                        break
-                    _time.sleep(0.05)
-                else:
-                    raise TimeoutError("sample-restart phase 2: "
-                                       "no progress")
-            finally:
-                q.stop()               # the mid-drain kill
-                q.awaitTermination(60)
-            # Count floor from the checkpoint WAL (r11 verdict #5): the
-            # kill point is nondeterministic but recorded — the resume
-            # must consume at least the uncommitted remainder.
-            floor = resume_floor(ckpt, total)
-            q = start({"processingTime": "0 seconds"},
-                      rate_limited=False)
-            drain_available(q, timeout_seconds=180, expected_rows=floor)
-        final = spark.read.parquet(out)
-    finally:
-        try:
-            if q is not None and q.isActive:
-                q.stop()
-                q.awaitTermination(60)
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with _rocksdb_state(spark):
+        kill_resume(start, ckpt, total, "sample-restart")
+    final = spark.read.parquet(out)
     w = Window.partitionBy("key", "rnk").orderBy(F.desc("n_seen"))
     return (final.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)

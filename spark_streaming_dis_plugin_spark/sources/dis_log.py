@@ -574,14 +574,25 @@ def create_log_from_events(spark: SparkSession, events_path: str, root: str,
     log = DisLog(root, stream).create(num_partitions)
     env = envelope(load_events(spark, os.path.dirname(events_path)),
                    stream, num_partitions)
-    (env.select("partition", "offset", "key", "value", "timestamp")
-        .repartition(num_partitions, "partition")
+    write_with_offsets(
+        env.select("partition", "offset", "key", "value", "timestamp"),
+        root, stream, num_partitions, segment_rows)
+    return log
+
+
+def write_with_offsets(env: DataFrame, root: str, stream: str,
+                       num_partitions: int, segment_rows: int) -> None:
+    """Append rows that carry their own ``partition`` and ``offset``
+    through the ``format("dis")`` writer's explicit-offset mode: shuffled
+    into ``num_partitions`` tasks by log partition and sorted by offset
+    within each, so every task hands the writer contiguous per-partition
+    runs; segments are cut every ``segment_rows`` offsets."""
+    (env.repartition(num_partitions, "partition")
         .sortWithinPartitions("partition", "offset")
         .write.format("dis")
         .option("path", root).option("stream", stream)
         .option("segmentRows", str(segment_rows))
         .mode("append").save())
-    return log
 
 
 def _newest_mtime(path: str) -> float:

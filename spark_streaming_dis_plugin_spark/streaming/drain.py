@@ -28,12 +28,17 @@ still required, because timer/watermark-driven operators (session
 timeouts, append-mode window flush) emit on no-data batches AFTER the
 last input row. Count-polling makes early stop impossible; the idle
 tail keeps flush semantics intact.
+
+:func:`kill_resume` is the one kill/resume protocol every restart gate
+runs over its checkpoint, and :func:`await_progress` the one wait for a
+live query's first progress event.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 
@@ -181,3 +186,74 @@ def drain_available(query, idle_batches: int = 2, poll_seconds: float = 0.25,
             + f"; last progress: {query.lastProgress})")
     finally:
         query.stop()
+
+
+def await_progress(query, label: str, timeout_seconds: float = 120.0,
+                   data: bool = True) -> None:
+    """Block until ``query`` publishes its first micro-batch with input
+    rows — or, with ``data=False``, its first progress event of any kind
+    (the proof that a live query has captured its start position). A
+    query failure is re-raised as is; a timeout raises ``TimeoutError``
+    naming ``label``."""
+    deadline = time.monotonic() + timeout_seconds
+    while time.monotonic() < deadline:
+        if query.exception() is not None:
+            raise query.exception()
+        progress = query.recentProgress
+        if progress and (not data
+                         or any(p["numInputRows"] > 0 for p in progress)):
+            return
+        time.sleep(0.05)
+    raise TimeoutError(f"{label}: no {'data batch' if data else 'progress'}"
+                       f" within {timeout_seconds}s")
+
+
+def stop_query(query) -> None:
+    """Stop ``query`` if it is still running; a failing stop is ignored,
+    so cleanup never masks the error that triggered it."""
+    try:
+        if query is not None and query.isActive:
+            query.stop()
+            query.awaitTermination(60)
+    except Exception:
+        pass
+
+
+def kill_resume(start, ckpt: str, total_rows: int, label: str) -> None:
+    """Run the three-phase kill/resume protocol over one checkpoint.
+
+    ``start(trigger, rate_limited=...)`` starts the gate's query on
+    ``ckpt`` with ``trigger`` as ``DataStreamWriter.trigger`` keywords,
+    under the gate's rate limit when ``rate_limited``:
+
+    1. rate-limited ``availableNow`` — the Python DataSource API captures
+       the first (clamped) planned offset as the drain target, so the run
+       consumes one batch and terminates with the checkpoint parked
+       mid-backlog by construction;
+    2. rate-limited processing-time run, killed from the driver once its
+       first data batch commits — a stop with a possibly in-flight batch
+       that the restart must re-plan from the offset WAL;
+    3. unthrottled processing-time run drained by :func:`drain_available`
+       — not availableNow, which could capture the recovered (still
+       rate-limited) batch end as its target — with the WAL's
+       uncommitted remainder (:func:`resume_floor` of ``total_rows``) as
+       the count floor. ``total_rows`` counts every source instance the
+       query plans (a self-join passes twice the log's rows).
+
+    Whichever phase raises, no query is left running and ``ckpt`` is
+    removed."""
+    query = None
+    try:
+        query = start({"availableNow": True}, rate_limited=True)
+        if not query.awaitTermination(120):
+            raise TimeoutError(f"{label} phase 1 did not terminate")
+        query = start({"processingTime": "0 seconds"}, rate_limited=True)
+        await_progress(query, f"{label} phase 2")
+        query.stop()                        # the mid-backlog kill
+        query.awaitTermination(60)
+        floor = resume_floor(ckpt, total_rows)
+        query = start({"processingTime": "0 seconds"}, rate_limited=False)
+        drain_available(query, timeout_seconds=180, expected_rows=floor)
+    finally:
+        stop_query(query)
+        shutil.rmtree(ckpt, ignore_errors=True)

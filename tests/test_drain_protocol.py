@@ -309,3 +309,150 @@ def test_resume_floor_known_cases(tmp_path):
     assert resume_floor(ckpt, 500) == 200
     # committed can exceed the caller's total (restart after growth): clamp
     assert resume_floor(ckpt, 100) == 0
+
+
+# ------------------------------------------------- kill/resume protocol
+
+class _FakeRun(_FakeQuery):
+    """A started query as kill_resume drives it: ``terminates`` says
+    whether awaitTermination sees it end by itself (the availableNow
+    run), ``error`` is what exception() reports."""
+
+    def __init__(self, steps, terminates: bool = False, error=None):
+        super().__init__(steps)
+        self._terminates = terminates
+        self._error = error
+
+    @property
+    def isActive(self):
+        return not (self.stopped or self._terminates)
+
+    def awaitTermination(self, timeout=None):
+        return not self.isActive
+
+    def exception(self):
+        return self._error
+
+
+def _starter(*runs):
+    """A ``start(trigger, rate_limited)`` closure handing out ``runs`` in
+    order; ``calls`` records its arguments."""
+    calls = []
+
+    def start(trigger, rate_limited):
+        calls.append((trigger, rate_limited))
+        return runs[len(calls) - 1]
+
+    return start, calls
+
+
+def _ckpt_with_wal(tmp_path, committed: int) -> str:
+    """A checkpoint whose newest committed batch ends at ``committed``."""
+    import json
+    import os
+
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(f"{ckpt}/offsets")
+    os.makedirs(f"{ckpt}/commits")
+    with open(f"{ckpt}/offsets/0", "w") as f:
+        f.write("v1\n" + json.dumps({"batchWatermarkMs": 0}) + "\n"
+                + json.dumps({"0": committed}))
+    with open(f"{ckpt}/commits/0", "w") as f:
+        f.write("v1\n{}")
+    return ckpt
+
+
+def test_kill_resume_kills_phase_two_on_first_data_batch(tmp_path):
+    import os
+
+    from spark_streaming_dis_plugin_spark.streaming.drain import kill_resume
+
+    ckpt = _ckpt_with_wal(tmp_path, 0)
+    phase2 = _FakeRun([[], [_p(0, 0, 0.0)],
+                       [_p(0, 0, 0.0), _p(1, 40, 0.5)],
+                       [_p(0, 0, 0.0), _p(1, 40, 0.5), _p(2, 40, 1.0)]])
+    start, calls = _starter(
+        _FakeRun([[]], terminates=True), phase2,
+        _FakeRun([[_p(0, 100, 0.0), _p(1, 0, 1.0), _p(2, 0, 5.0)]]))
+    kill_resume(start, ckpt, 100, "gate")
+    # stopped on the poll that first showed input rows, not later
+    assert phase2.stopped and phase2._i == 3
+    assert calls == [({"availableNow": True}, True),
+                     ({"processingTime": "0 seconds"}, True),
+                     ({"processingTime": "0 seconds"}, False)]
+    assert not os.path.exists(ckpt)
+
+
+@pytest.mark.parametrize("phase", [1, 2, 3])
+def test_kill_resume_failure_stops_query_and_removes_checkpoint(
+        tmp_path, monkeypatch, phase):
+    """Whichever phase raises, no started query is left running and the
+    checkpoint is gone — the cleanup every restart gate relies on."""
+    import os
+
+    from spark_streaming_dis_plugin_spark.streaming import drain
+
+    ckpt = _ckpt_with_wal(tmp_path, 0)
+    runs = [_FakeRun([[]], terminates=phase != 1),
+            _FakeRun([[_p(0, 40, 0.0)]],
+                     error=RuntimeError("boom") if phase == 2 else None),
+            _FakeRun([[]])]
+
+    def failing_drain(query, **kw):    # raises without stopping query
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(drain, "drain_available", failing_drain)
+    start, calls = _starter(*runs)
+    with pytest.raises(TimeoutError if phase == 1 else RuntimeError):
+        drain.kill_resume(start, ckpt, 100, "gate")
+    assert len(calls) == phase
+    assert not any(r.isActive for r in runs[:phase])
+    assert not os.path.exists(ckpt)
+
+
+def test_kill_resume_phase_three_drains_to_the_wal_floor(tmp_path,
+                                                          monkeypatch):
+    from spark_streaming_dis_plugin_spark.streaming import drain
+
+    ckpt = _ckpt_with_wal(tmp_path, 300)
+    expected = drain.resume_floor(ckpt, 500)
+    seen = {}
+
+    def recording_drain(query, **kw):
+        seen.update(kw)
+        query.stop()
+        return 1
+
+    monkeypatch.setattr(drain, "drain_available", recording_drain)
+    start, _ = _starter(_FakeRun([[]], terminates=True),
+                        _FakeRun([[_p(0, 40, 0.0)]]), _FakeRun([[]]))
+    drain.kill_resume(start, ckpt, 500, "gate")
+    assert expected == 200
+    assert seen == {"timeout_seconds": 180, "expected_rows": expected}
+
+
+def test_await_progress_reraises_query_exception():
+    from spark_streaming_dis_plugin_spark.streaming.drain import (
+        await_progress,
+    )
+
+    err = RuntimeError("query died")
+    with pytest.raises(RuntimeError) as info:
+        await_progress(_FakeRun([[_p(0, 40, 0.0)]], error=err), "gate")
+    assert info.value is err
+
+
+def test_await_progress_timeout_names_the_gate():
+    from spark_streaming_dis_plugin_spark.streaming.drain import (
+        await_progress,
+    )
+
+    idle = [[_p(0, 0, 0.0)]]
+    with pytest.raises(TimeoutError, match=r"tail gate: no data batch"):
+        await_progress(_FakeRun(idle), "tail gate", timeout_seconds=0.1)
+    # any progress event is enough when no data batch is asked for
+    await_progress(_FakeRun(idle), "tail gate", timeout_seconds=0.1,
+                   data=False)
+    with pytest.raises(TimeoutError, match=r"tail gate: no progress"):
+        await_progress(_FakeRun([[]]), "tail gate", timeout_seconds=0.1,
+                       data=False)

@@ -1,17 +1,22 @@
-"""Snapshot (or compare) the segment-file bytes of every fixture-log
-materializer — the r9 verdict #6 byte-identity check: the de-windowed
-offset assignment must produce bit-identical logs.
+"""Snapshot (or compare) the segment-file bytes of every fixture log the
+connector harness builds — the byte-identity check for any change to a
+fixture-log builder or to the explicit-offset write path: write a
+snapshot on the parent commit, check it on the change.
 
-    python tools/snapshot_logs.py write /tmp/log_hashes.json
-    python tools/snapshot_logs.py check /tmp/log_hashes.json
+    python tools/snapshot_logs.py write /tmp/log_hashes.json [SF_DIR]
+    python tools/snapshot_logs.py check /tmp/log_hashes.json [SF_DIR]
+
+The tool imports the package from the checkout it sits in, so running a
+second checkout's copy snapshots that checkout's builders.
 """
 import hashlib
 import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.chdir(REPO)
 
 MODE, OUT = sys.argv[1], sys.argv[2]
 SF = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
@@ -24,8 +29,10 @@ spark = (SparkSession.builder.master("local[8]")
 spark.sparkContext.setLogLevel("ERROR")
 
 from spark_streaming_dis_plugin_spark.operators import connector as C  # noqa: E402
+from spark_streaming_dis_plugin_spark.sources.dis_log import DisLog  # noqa: E402
 
 MATERIALIZERS = [
+    "_materialized_log",
     "_materialized_scrambled_log",
     "_materialized_ordered_log",
     "_materialized_scrambled_multipart_log",
@@ -33,7 +40,18 @@ MATERIALIZERS = [
     "_materialized_embeddings_log",
     "_materialized_ann_query_log",
     "_materialized_zvalue_log",
+    "_materialized_typed_value_log",
 ]
+
+
+def fixture_logs():
+    """(label, DisLog) for every fixture log; the multi-stream root
+    contributes one entry per stream."""
+    for name in MATERIALIZERS:
+        yield name, getattr(C, name)(spark, SF)
+    root = C._materialized_multi_log(spark, SF)
+    for stream, _ in C.MULTI_STREAM_SPLIT:
+        yield f"_materialized_multi_log/{stream}", DisLog(root, stream)
 
 
 def log_hashes(log) -> dict:
@@ -51,8 +69,7 @@ def log_hashes(log) -> dict:
 
 
 snap = {}
-for name in MATERIALIZERS:
-    log = getattr(C, name)(spark, SF)
+for name, log in fixture_logs():
     snap[name] = log_hashes(log)
     print(f"{name}: {len(snap[name])} segments", flush=True)
 
@@ -62,7 +79,7 @@ if MODE == "write":
 else:
     ref = json.load(open(OUT))
     bad = 0
-    for name in MATERIALIZERS:
+    for name in snap:
         if ref.get(name) != snap[name]:
             bad += 1
             rk, sk = set(ref.get(name, {})), set(snap[name])
