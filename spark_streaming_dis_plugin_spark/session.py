@@ -3,13 +3,38 @@
 At cluster scale the same settings apply except parallelism knobs, which
 should track executor count (shuffle partitions ~= 2-3x total cores; AQE
 coalesces the excess at runtime).
+
+Python workers come from this package's :mod:`worker_daemon`
+(``spark.python.daemon.module``): pyspark's own daemon lets every task
+re-read each zip archive on the worker path, 250-280 ms a task on Python
+< 3.13, and the package's daemon skips the re-read while an archive is
+unchanged. The daemon is started as ``python -m`` in the driver's working
+directory, so the package's parent directory goes first on the workers'
+``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``); without it a driver
+started outside the checkout fails every Python task with "No module
+named 'spark_streaming_dis_plugin_spark'". Both are static settings of a
+new SparkContext: a session built before this package is imported — the
+session-first ``__spark_entry__.py`` shape — runs pyspark's own daemon.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _worker_path() -> str:
+    """The package's parent directory, then the worker path the JVM's
+    configuration already holds, if a JVM is up in this process (a
+    builder value replaces the launch configuration's, so that value
+    would otherwise be lost)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    existing = SparkConf().get(_WORKER_PATH, None)
+    return os.pathsep.join([root, existing] if existing else [root])
 
 
 def get_spark(app_name: str = "spark_streaming_dis_plugin_spark",
@@ -40,5 +65,7 @@ def get_spark(app_name: str = "spark_streaming_dis_plugin_spark",
         .config("spark.sql.streaming.noDataProgressEventInterval", "250ms")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config(_WORKER_PATH, _worker_path())
         .getOrCreate()
     )

@@ -119,9 +119,10 @@ class ReadTask(InputPartition):
 
 
 # Planned records one read task may carry before the planner opens the
-# next one. Measured at local[2] (BENCH_NOTES "Record-sized read tasks"):
-# a Python read task costs ~230 ms before it reads a record, and 4 ranges
-# of 25k records read in ~800 ms as 4 tasks but ~550 ms as 2 or as 1, so
+# next one. Measured at local[2] under the package's worker daemon
+# (BENCH_NOTES "Zip-aware Python worker daemon"): a wave of Python read
+# tasks costs ~70-110 ms before it reads a record, and 4 ranges of 50k
+# records read in ~720 ms as 4 tasks, ~590 ms as 2 and ~640 ms as 1, so
 # splitting pays only past ~50k records a task.
 _TASK_RECORDS = 1 << 16
 

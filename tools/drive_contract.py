@@ -11,10 +11,14 @@ so full sweeps are auditable in-repo (tools/sweep.py merges the SF/TZ
 matrix into SWEEP_r{N}.json); without it, behavior is unchanged.
 Queries that RAISE are recorded with err and counted as failures —
 the sweep must not paper over a crashing gate.
+
+The tool imports the package and ``__spark_entry__`` from the checkout
+it sits in, so a second checkout's copy checks that checkout's code.
 """
 import json, os, sys, math, datetime, decimal
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.chdir(REPO)
 
 argv = list(sys.argv[1:])
 json_out = None
