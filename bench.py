@@ -107,16 +107,10 @@ def _streaming_throughput(spark, sf_dir: str) -> dict:
     from spark_streaming_dis_plugin_spark.operators.connector import (
         _materialized_log,
     )
-    from spark_streaming_dis_plugin_spark.streaming.drain import (
-        drain_available,
-    )
+    from spark_streaming_dis_plugin_spark.streaming.drain import streams
     from spark_streaming_dis_plugin_spark.streaming.queries import (
         running_wordcount,
     )
-    from spark_streaming_dis_plugin_spark.scratch import scratch_dir
-
-    import shutil
-    import uuid
 
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
@@ -127,33 +121,24 @@ def _streaming_throughput(spark, sf_dir: str) -> dict:
     # runs a processingTime trigger drained by drain_available.
     for label, max_per in (("single_batch", None),
                            ("six_batches", -(-total // 6))):
-        ckpt = scratch_dir("bench_thr_ckpt_")
-        name = f"thr_{uuid.uuid4().hex[:8]}"
         reader = (spark.readStream.format("dis")
                   .option("path", log.root).option("stream", log.stream))
         if max_per:
             reader = reader.option("maxOffsetsPerTrigger", str(max_per))
         t0 = time.perf_counter()
         writer = (running_wordcount(reader.load())
-                  .writeStream.format("memory").queryName(name)
-                  .outputMode("complete")
-                  .option("checkpointLocation", ckpt))
-        if max_per:
-            q = writer.trigger(processingTime="0 seconds").start()
-            n_batches = drain_available(q, timeout_seconds=300,
-                                        expected_rows=total)
-        else:
-            q = writer.trigger(availableNow=True).start()
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("throughput drain did not terminate")
-            n_batches = 1
-        dt = time.perf_counter() - t0
+                  .writeStream.format("memory").outputMode("complete"))
+        with streams("thr") as owner:
+            q = owner.start(writer, available_now=not max_per)
+            try:
+                n_batches = owner.drain(
+                    q, expected_rows=total if max_per else None)
+                dt = time.perf_counter() - t0
+            finally:
+                spark.catalog.dropTempView(q.name)
         out[f"records_per_sec_{label}"] = round(total / dt, 1)
         out[f"drain_sec_{label}"] = round(dt, 3)
         out[f"data_batches_{label}"] = n_batches
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
     return out
 
 

@@ -25,6 +25,9 @@ from ..scratch import scratch_dir
 from ..sources.dis_log import (
     DEFAULT_NUM_PARTITIONS, DisLog, envelope, envelope_sql, write_with_offsets,
 )
+from ..streaming.drain import (
+    await_progress, kill_resume, query_name, resume_floor, run, streams,
+)
 from ..tables import load
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -407,35 +410,9 @@ def dis_wordcount_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _materialized_log(spark, sf_dir)
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream).load())
-    return _drain_to_memory(spark, running_wordcount(sdf), "wc_stream",
-                            output_mode="complete")
-
-
-def _drain_to_memory(spark: SparkSession, streamed: DataFrame, prefix: str,
-                     output_mode: str = "complete",
-                     timeout_s: int = 180) -> DataFrame:
-    """availableNow-drain a streaming DataFrame into a memory sink and
-    return the final table. A timeout raises (stopping the query) instead
-    of returning a partially drained table that would surface as a
-    confusing oracle hash mismatch; the checkpoint dir is cleaned up once
-    the query terminates."""
-    import shutil
-    import uuid
-
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(f"{prefix}_ckpt_")
-    try:
-        q = (streamed.writeStream.format("memory")
-             .queryName(name).outputMode(output_mode)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"streamed query {name} did not drain within {timeout_s}s")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    q = run(running_wordcount(sdf).writeStream.format("memory")
+            .outputMode("complete"), "wc_stream", available_now=True)
+    return spark.table(q.name)
 
 
 @register(
@@ -464,8 +441,9 @@ def dis_window_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _materialized_log(spark, sf_dir)
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream).load())
-    final = _drain_to_memory(spark, windowed_counts(sdf), "win_stream",
-                             output_mode="complete")
+    q = run(windowed_counts(sdf).writeStream.format("memory")
+            .outputMode("complete"), "win_stream", available_now=True)
+    final = spark.table(q.name)
     # The watermark machinery requires TIMESTAMP(LTZ); render back to the
     # wall clock in the session zone (whole-hour offsets + January-only
     # fixture data keep hour truncation DST-safe).
@@ -512,8 +490,9 @@ def dis_stream_stream_join_streamed(spark: SparkSession,
            .option("path", log.root).option("stream", log.stream).load())
     p = sdf.where(F.col("offset") % 3 == 0)
     c = sdf.where(F.col("offset") % 3 == 1)
-    final = _drain_to_memory(spark, purchase_click_join(p, c), "ssj_stream",
-                             output_mode="append")
+    q = run(purchase_click_join(p, c).writeStream.format("memory")
+            .outputMode("append"), "ssj_stream", available_now=True)
+    final = spark.table(q.name)
     return final.select("p_key", "p_partition", "p_offset",
                         "c_partition", "c_offset")
 
@@ -562,8 +541,9 @@ def dis_session_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _materialized_log(spark, sf_dir)
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream).load())
-    final = _drain_to_memory(spark, session_counts(sdf), "sess_stream",
-                             output_mode="complete")
+    q = run(session_counts(sdf).writeStream.format("memory")
+            .outputMode("complete"), "sess_stream", available_now=True)
+    final = spark.table(q.name)
     return final.select(
         "key",
         F.date_format("session_start", TS_FMT_SPARK).alias("session_start"),
@@ -708,8 +688,9 @@ def dis_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream).load())
     deduped = dedup_within_watermark(sdf).select("key", "value")
-    final = _drain_to_memory(spark, deduped, "dedup_stream",
-                             output_mode="append")
+    q = run(deduped.writeStream.format("memory")
+            .outputMode("append"), "dedup_stream", available_now=True)
+    final = spark.table(q.name)
     return final.select("key", "value")
 
 
@@ -857,39 +838,26 @@ def dis_late_drop_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/drain.drain_available): a rate-limited availableNow run
     would stop after one clamped batch (Python DataSource API limitation,
     see that module's docstring)."""
-    import shutil
-    import uuid
-
-    from ..streaming.drain import drain_available
     from ..streaming.queries import late_window_counts
 
     log = _materialized_scrambled_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     per = max(-(-total // 6), 1)
-    name = f"latedrop_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("latedrop_ckpt_")
-    try:
-        sdf = (spark.readStream.format("dis")
-               .option("path", log.root).option("stream", log.stream)
-               .option("maxOffsetsPerTrigger", str(per))
-               .load())
-        q = (late_window_counts(sdf)
-             .writeStream.format("memory")
-             .queryName(name).outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(processingTime="0 seconds").start())
-        drain_available(q, timeout_seconds=300, expected_rows=total)
-        dropped = sum(
-            int(op.get("numRowsDroppedByWatermark", 0))
-            for p in q.recentProgress
-            for op in p.get("stateOperators", []))
-        if dropped == 0:
-            raise AssertionError(
-                "late-drop gate ran without dropping any rows — "
-                "watermark eviction is not being exercised")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    final = spark.table(name)
+    sdf = (spark.readStream.format("dis")
+           .option("path", log.root).option("stream", log.stream)
+           .option("maxOffsetsPerTrigger", str(per))
+           .load())
+    q = run(late_window_counts(sdf).writeStream.format("memory")
+            .outputMode("append"), "latedrop", expected_rows=total)
+    dropped = sum(
+        int(op.get("numRowsDroppedByWatermark", 0))
+        for p in q.recentProgress
+        for op in p.get("stateOperators", []))
+    if dropped == 0:
+        raise AssertionError(
+            "late-drop gate ran without dropping any rows — "
+            "watermark eviction is not being exercised")
+    final = spark.table(q.name)
     return final.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
          .alias("window_start"),
@@ -1023,39 +991,26 @@ def dis_late_drop_multipart_streamed(spark: SparkSession,
 
     Asserts ``numRowsDroppedByWatermark > 0`` like the single-partition
     gate: a silently non-evicting regression cannot pass."""
-    import shutil
-    import uuid
-
-    from ..streaming.drain import drain_available
     from ..streaming.queries import late_window_counts
 
     log = _materialized_scrambled_multipart_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     per = max(-(-total // 6), 1)
-    name = f"latedropmp_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("latedropmp_ckpt_")
-    try:
-        sdf = (spark.readStream.format("dis")
-               .option("path", log.root).option("stream", log.stream)
-               .option("maxOffsetsPerTrigger", str(per))
-               .load())
-        q = (late_window_counts(sdf)
-             .writeStream.format("memory")
-             .queryName(name).outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(processingTime="0 seconds").start())
-        drain_available(q, timeout_seconds=300, expected_rows=total)
-        dropped = sum(
-            int(op.get("numRowsDroppedByWatermark", 0))
-            for p in q.recentProgress
-            for op in p.get("stateOperators", []))
-        if dropped == 0:
-            raise AssertionError(
-                "multi-partition late-drop gate ran without dropping any "
-                "rows — watermark eviction is not being exercised")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    final = spark.table(name)
+    sdf = (spark.readStream.format("dis")
+           .option("path", log.root).option("stream", log.stream)
+           .option("maxOffsetsPerTrigger", str(per))
+           .load())
+    q = run(late_window_counts(sdf).writeStream.format("memory")
+            .outputMode("append"), "latedropmp", expected_rows=total)
+    dropped = sum(
+        int(op.get("numRowsDroppedByWatermark", 0))
+        for p in q.recentProgress
+        for op in p.get("stateOperators", []))
+    if dropped == 0:
+        raise AssertionError(
+            "multi-partition late-drop gate ran without dropping any "
+            "rows — watermark eviction is not being exercised")
+    final = spark.table(q.name)
     return final.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
          .alias("window_start"),
@@ -1070,41 +1025,6 @@ _ORDERED_ENV = """
                   AS BIGINT) AS "offset"
       FROM events
 """
-
-
-def _drain_multibatch(spark: SparkSession, streamed: DataFrame, prefix: str,
-                      min_batches: int = 3,
-                      timeout_s: int = 300,
-                      output_mode: str = "append",
-                      expected_rows: int | None = None) -> DataFrame:
-    """Rate-limited multi-batch drain for the *_multibatch_* gates:
-    processing-time trigger + idle-detection (a rate-limited availableNow
-    would stop after one clamped batch), asserting the run really spread
-    the backlog over >= ``min_batches`` data batches — the property these
-    gates exist to exercise. Callers that know the backlog size pass
-    ``expected_rows`` so the drain count-polls input consumption before
-    trusting the idle tail (load-robust, r10 verdict #4)."""
-    import shutil
-    import uuid
-
-    from ..streaming.drain import drain_available
-
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(f"{prefix}_ckpt_")
-    try:
-        q = (streamed.writeStream.format("memory")
-             .queryName(name).outputMode(output_mode)
-             .option("checkpointLocation", ckpt)
-             .trigger(processingTime="0 seconds").start())
-        data_batches = drain_available(q, timeout_seconds=timeout_s,
-                                       expected_rows=expected_rows)
-        if data_batches < min_batches:
-            raise AssertionError(
-                f"{prefix}: backlog drained in {data_batches} batches; "
-                f"the multi-batch gate requires >= {min_batches}")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(
@@ -1153,9 +1073,10 @@ def dis_multibatch_join_streamed(spark: SparkSession,
     # a stream-stream self-join plans TWO source instances, each
     # reading the full backlog (measured: cumulative numInputRows is
     # exactly 2x the log total), so the count-polling target doubles
-    final = _drain_multibatch(
-        spark, purchase_click_join(p, c), "mbjoin",
-        expected_rows=2 * total)
+    q = run(purchase_click_join(p, c)
+            .writeStream.format("memory").outputMode("append"),
+            "mbjoin", expected_rows=2 * total, min_batches=3)
+    final = spark.table(q.name)
     return final.select("p_key", "p_offset", "c_offset")
 
 
@@ -1197,9 +1118,6 @@ def dis_join_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     dis_multibatch_join_streamed, so its losslessness argument (no
     match can straddle an eviction) carries over and the batch join
     stays the exact oracle."""
-    import uuid
-
-    from ..streaming.drain import kill_resume
     from ..streaming.queries import purchase_click_join
 
     log = _materialized_ordered_log(spark, sf_dir)
@@ -1207,7 +1125,7 @@ def dis_join_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_trigger = max(total // 6, 1)
     out = scratch_dir("joinrestart_out_")
     ckpt = scratch_dir("joinrestart_ckpt_")
-    name = f"joinrestart_{uuid.uuid4().hex[:8]}"
+    name = query_name("joinrestart")
 
     def start(trigger: dict, rate_limited: bool):
         r = (spark.readStream.format("dis")
@@ -1259,8 +1177,9 @@ def dis_assign_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
            .option("path", log.root).option("stream", log.stream)
            .option("assign", '{"events": [0, 2]}')
            .load())
-    return _drain_to_memory(spark, running_wordcount(sdf), "assign_stream",
-                            output_mode="complete")
+    q = run(running_wordcount(sdf).writeStream.format("memory")
+            .outputMode("complete"), "assign_stream", available_now=True)
+    return spark.table(q.name)
 
 
 @register(
@@ -1334,36 +1253,23 @@ def dis_chained_stateful_streamed(spark: SparkSession,
     Needs the processing-time drain: availableNow terminates before the
     no-data flush batch, leaving every append-mode window in state (an
     empty result — observed, which is why this gate cannot use
-    _drain_to_memory's trigger)."""
-    import shutil
-    import uuid
-
-    from ..streaming.drain import drain_available
-
+    the availableNow trigger)."""
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
-    name = f"chain_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("chain_ckpt_")
-    try:
-        sdf = (spark.readStream.format("dis")
-               .option("path", log.root).option("stream", log.stream)
-               .load())
-        chained = (
-            sdf.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-            .withColumn("hour", F.date_trunc("hour", "timestamp"))
-            .withWatermark("timestamp", "2 hours")
-            .dropDuplicatesWithinWatermark(["key", "value", "hour"])
-            .groupBy(F.window("timestamp", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col("w.start").alias("window_start"), "n"))
-        q = (chained.writeStream.format("memory")
-             .queryName(name).outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(processingTime="0 seconds").start())
-        drain_available(q, timeout_seconds=240, expected_rows=total)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return (spark.table(name)
+    sdf = (spark.readStream.format("dis")
+           .option("path", log.root).option("stream", log.stream)
+           .load())
+    chained = (
+        sdf.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
+        .withColumn("hour", F.date_trunc("hour", "timestamp"))
+        .withWatermark("timestamp", "2 hours")
+        .dropDuplicatesWithinWatermark(["key", "value", "hour"])
+        .groupBy(F.window("timestamp", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").alias("window_start"), "n"))
+    q = run(chained.writeStream.format("memory").outputMode("append"),
+            "chain", expected_rows=total)
+    return (spark.table(q.name)
             .select(F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
                      .alias("window_start"), "n"))
 
@@ -1424,8 +1330,9 @@ def dis_docs_pipeline_streamed(spark: SparkSession,
         F.size(toks).alias("n_word_tokens"),
         F.length("value").alias("n_chars"),
         ((F.length("value") >= 200) & (F.size(toks) >= 30)).alias("keep"))
-    return _drain_to_memory(spark, stats, "docstream",
-                            output_mode="append")
+    q = run(stats.writeStream.format("memory")
+            .outputMode("append"), "docstream", available_now=True)
+    return spark.table(q.name)
 
 
 @register(
@@ -1451,32 +1358,21 @@ def dis_docs_curation_sink_streamed(spark: SparkSession,
     offsets: sink offsets depend on task arrival order within the batch,
     which exactly-once guarantees make stable in COUNT but not in
     assignment — asserting them would pin an implementation accident."""
-    import shutil
-
     from ..functions.portable import tokens
 
     log = _materialized_docs_log(spark, sf_dir)
     dest_root = scratch_dir("dis_curated_")
     DisLog(dest_root, "curated").create(DEFAULT_NUM_PARTITIONS)
-    ckpt = scratch_dir("dis_curated_ckpt_")
-    try:
-        sdf = (spark.readStream.format("dis")
-               .option("path", log.root).option("stream", log.stream)
-               .load())
-        toks = tokens("value")
-        kept = (sdf.where((F.length("value") >= 200) & (F.size(toks) >= 30))
-                .select("partition", "key", "value", "timestamp"))
-        q = (kept.writeStream.format("dis")
-             .option("path", dest_root).option("stream", "curated")
-             .option("txnPrefix", "curate")
-             .option("segmentRows", "1000")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("curation sink drain did not terminate")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    sdf = (spark.readStream.format("dis")
+           .option("path", log.root).option("stream", log.stream)
+           .load())
+    toks = tokens("value")
+    kept = (sdf.where((F.length("value") >= 200) & (F.size(toks) >= 30))
+            .select("partition", "key", "value", "timestamp"))
+    run(kept.writeStream.format("dis")
+        .option("path", dest_root).option("stream", "curated")
+        .option("txnPrefix", "curate")
+        .option("segmentRows", "1000"), "dis_curated", available_now=True)
     dest = (spark.read.format("dis")
             .option("path", dest_root).option("stream", "curated").load())
     return dest.select(F.col("key").cast("bigint").alias("doc_id"),
@@ -1535,8 +1431,9 @@ def dis_update_mode_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split("value", "[^a-zA-Z0-9_]+")).alias("word"))
           .where(F.col("word") != "")
           .groupBy("word").agg(F.count(F.lit(1)).alias("n")))
-    final = _drain_multibatch(spark, wc, "updmode", output_mode="update",
-                              expected_rows=total)
+    q = run(wc.writeStream.format("memory").outputMode("update"),
+            "updmode", expected_rows=total, min_batches=3)
+    final = spark.table(q.name)
     # Batch attribution: a word's cumulative counts are strictly
     # increasing, so its k-th update (by n) belongs to the k-th batch in
     # which it occurred; that batch sequence is recomputed from a batch
@@ -1613,9 +1510,11 @@ def dis_left_outer_join_streamed(spark: SparkSession,
            .load())
     p = sdf.where(F.col("offset") % 3 == 0)
     c = sdf.where(F.col("offset") % 3 == 1)
-    final = _drain_multibatch(
-        spark, purchase_click_join(p, c, how="left_outer"), "lojoin",
-        expected_rows=2 * total)  # self-join: 2 source instances
+    # self-join: 2 source instances
+    q = run(purchase_click_join(p, c, how="left_outer")
+            .writeStream.format("memory").outputMode("append"),
+            "lojoin", expected_rows=2 * total, min_batches=3)
+    final = spark.table(q.name)
     return final.select("p_key", "p_offset", "c_offset")
 
 
@@ -1671,9 +1570,11 @@ def dis_full_outer_join_streamed(spark: SparkSession,
            .load())
     p = sdf.where(F.col("offset") % 3 == 0)
     c = sdf.where(F.col("offset") % 3 == 1)
-    final = _drain_multibatch(
-        spark, purchase_click_join(p, c, how="full_outer"), "fojoin",
-        expected_rows=2 * total)  # self-join: 2 source instances
+    # self-join: 2 source instances
+    q = run(purchase_click_join(p, c, how="full_outer")
+            .writeStream.format("memory").outputMode("append"),
+            "fojoin", expected_rows=2 * total, min_batches=3)
+    final = spark.table(q.name)
     return final.select("p_key", "p_offset", "c_key", "c_offset")
 
 
@@ -1718,7 +1619,9 @@ def dis_stream_static_join_streamed(spark: SparkSession,
               .join(F.broadcast(profile), "key")
               .select("key", "partition", "offset",
                       "user_events", "user_value"))
-    return _drain_to_memory(spark, joined, "ssjoin", output_mode="append")
+    q = run(joined.writeStream.format("memory")
+            .outputMode("append"), "ssjoin", available_now=True)
+    return spark.table(q.name)
 
 
 @register(
@@ -1778,8 +1681,10 @@ def dis_multibatch_session_streamed(spark: SparkSession,
            .option("path", log.root).option("stream", log.stream)
            .option("maxOffsetsPerTrigger", str(per))
            .load())
-    final = _drain_multibatch(spark, session_counts(sdf), "mbsess",
-                              expected_rows=total)
+    q = run(session_counts(sdf)
+            .writeStream.format("memory").outputMode("append"),
+            "mbsess", expected_rows=total, min_batches=3)
+    final = spark.table(q.name)
     return final.select(
         "key",
         F.date_format("session_start", TS_FMT_SPARK).alias("session_start"),
@@ -1856,8 +1761,9 @@ def dis_multibatch_dedup_streamed(spark: SparkSession,
            .option("maxOffsetsPerTrigger", str(per))
            .load())
     deduped = dedup_within_watermark(sdf).select("key", "value", "offset")
-    final = _drain_multibatch(spark, deduped, "mbdedup",
-                              expected_rows=total)
+    q = run(deduped.writeStream.format("memory").outputMode("append"),
+            "mbdedup", expected_rows=total, min_batches=3)
+    final = spark.table(q.name)
     n_emitted = final.count()
     n_distinct = final.select("key", "value").distinct().count()
     if n_emitted <= n_distinct:
@@ -1918,14 +1824,11 @@ def _restart_drain(spark: SparkSession, sf_dir: str, build,
     shared events log: ``build`` maps the streaming envelope to the
     stateful query; the final complete-mode memory table is returned for
     the oracle."""
-    import uuid
-
-    from ..streaming.drain import kill_resume
 
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     per_trigger = max(total // 6, 1)
-    name = f"{prefix}_stream_{uuid.uuid4().hex[:8]}"
+    name = query_name(f"{prefix}_stream")
     ckpt = scratch_dir(f"{prefix}_ckpt_")
 
     def start(trigger: dict, rate_limited: bool):
@@ -1999,8 +1902,9 @@ def dis_stateful_totals_streamed(spark: SparkSession,
     log = _materialized_log(spark, sf_dir)
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream).load())
-    final = _drain_to_memory(spark, running_totals_per_key(sdf),
-                             "stateful_stream", output_mode="update")
+    q = run(running_totals_per_key(sdf).writeStream.format("memory")
+            .outputMode("update"), "stateful_stream", available_now=True)
+    final = spark.table(q.name)
     w = Window.partitionBy("key").orderBy(F.desc("n_events"))
     return (final.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
@@ -2275,26 +2179,19 @@ def dis_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the hash. Offsets in the destination are assigned at commit
     (producer-mode tail append) and deliberately not projected; the
     forwarded partition column pins explicit routing."""
-
-    from ..streaming.drain import drain_available
-
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     dest_root = scratch_dir("dis_copy_")
     DisLog(dest_root, "copy").create(DEFAULT_NUM_PARTITIONS)
-    ckpt = scratch_dir("dis_copy_ckpt_")
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream)
            .option("maxOffsetsPerTrigger", str(max(total // 4, 1)))
            .load())
-    q = (sdf.select("partition", "key", "value", "timestamp")
-         .writeStream.format("dis")
-         .option("path", dest_root).option("stream", "copy")
-         .option("txnPrefix", "copy")
-         .option("segmentRows", "2000")
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="0 seconds").start())
-    drain_available(q, timeout_seconds=180, expected_rows=total)
+    run(sdf.select("partition", "key", "value", "timestamp")
+        .writeStream.format("dis")
+        .option("path", dest_root).option("stream", "copy")
+        .option("txnPrefix", "copy")
+        .option("segmentRows", "2000"), "dis_copy", expected_rows=total)
     df = (spark.read.format("dis")
           .option("path", dest_root).option("stream", "copy").load())
     return df.select(
@@ -2333,8 +2230,9 @@ def dis_sliding_window_streamed(spark: SparkSession,
     log = _materialized_log(spark, sf_dir)
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream).load())
-    final = _drain_to_memory(spark, sliding_counts(sdf), "slide_stream",
-                             output_mode="complete")
+    q = run(sliding_counts(sdf).writeStream.format("memory")
+            .outputMode("complete"), "slide_stream", available_now=True)
+    final = spark.table(q.name)
     return final.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
          .alias("window_start"), "n")
@@ -2363,31 +2261,19 @@ def dis_backpressure_streamed(spark: SparkSession,
     the drained UNION is not — the final complete-mode state must still
     hash-match the batch SQL, pinning that rate control never drops or
     doubles a record no matter where the batch cuts land."""
-    from ..streaming.drain import drain_available
     from ..streaming.queries import running_wordcount
-
-    import uuid
 
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
-    name = f"bp_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("bp_ckpt_")
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream)
            .option("backpressureEnabled", "true")
            .option("backpressureInitialRate", str(max(total // 4, 1)))
            .option("backpressureMinRate", str(max(total // 20, 1)))
            .load())
-    q = (running_wordcount(sdf).writeStream.format("memory")
-         .queryName(name).outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="0 seconds").start())
-    import shutil
-    try:
-        drain_available(q, timeout_seconds=180, expected_rows=total)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    q = run(running_wordcount(sdf).writeStream.format("memory")
+            .outputMode("complete"), "bp_stream", expected_rows=total)
+    return spark.table(q.name)
 
 
 @register(
@@ -2473,8 +2359,6 @@ def dis_sink_restart_roundtrip(spark: SparkSession,
     wholesale, crashed txn's tail segments rolled back,
     DisStreamWriter.commit); any slip shows up as a missing or doubled
     record in the destination read-back vs the envelope SQL."""
-    from ..streaming.drain import kill_resume
-
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     per_trigger = max(total // 6, 1)
@@ -2523,37 +2407,31 @@ def dis_restart_recovery_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal). Bench-only: the correctness of this exact path is already
     pinned by the oracle twin, so this row exists purely to catch
     recovery-cost regressions round-over-round."""
-    import shutil
-
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     per_trigger = max(total // 6, 1)
     dest_root = scratch_dir("dis_recbench_")
     DisLog(dest_root, "copy").create(DEFAULT_NUM_PARTITIONS)
-    ckpt = scratch_dir("dis_recbench_ckpt_")
 
-    def run(rate_limited: bool) -> None:
+    def writer(rate_limited: bool):
         r = (spark.readStream.format("dis")
              .option("path", log.root).option("stream", log.stream))
         if rate_limited:
             r = r.option("maxOffsetsPerTrigger", str(per_trigger))
-        q = (r.load()
-             .select("partition", "key", "value", "timestamp")
-             .writeStream.format("dis")
-             .option("path", dest_root).option("stream", "copy")
-             .option("txnPrefix", "recbench")
-             .option("segmentRows", "2000")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("recovery bench drain did not terminate")
+        return (r.load()
+                .select("partition", "key", "value", "timestamp")
+                .writeStream.format("dis")
+                .option("path", dest_root).option("stream", "copy")
+                .option("txnPrefix", "recbench")
+                .option("segmentRows", "2000"))
 
-    try:
-        run(rate_limited=True)    # one clamped batch -> ckpt mid-backlog
-        run(rate_limited=False)   # resume + full drain: the timed meat
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with streams("dis_recbench") as owner:
+        ckpt = owner.checkpoint()
+        for rate_limited in (True, False):
+            # one clamped batch parks the checkpoint mid-backlog; the
+            # resume + full drain is the timed meat
+            owner.drain(owner.start(writer(rate_limited), available_now=True,
+                                    ckpt=ckpt))
     return (spark.read.format("dis")
             .option("path", dest_root).option("stream", "copy").load()
             .select("partition", "offset", "key"))
@@ -2755,8 +2633,10 @@ def dis_semi_join_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
            .option("path", log.root).option("stream", log.stream).load())
     p = sdf.where(F.col("offset") % 3 == 0)
     c = sdf.where(F.col("offset") % 3 == 1)
-    final = _drain_to_memory(spark, purchase_click_join(p, c, how="left_semi"),
-                             "semij_stream", output_mode="append")
+    q = run(purchase_click_join(p, c, how="left_semi")
+            .writeStream.format("memory").outputMode("append"),
+            "semij_stream", available_now=True)
+    final = spark.table(q.name)
     return final.select("p_key", "p_partition", "p_offset")
 
 
@@ -2825,9 +2705,10 @@ def dis_state_timeout_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
            .option("path", log.root).option("stream", log.stream)
            .option("maxOffsetsPerTrigger", str(per))
            .load())
-    final = _drain_multibatch(spark, sessions_with_timeout(sdf),
-                              "sesstimeout", output_mode="append",
-                              expected_rows=total)
+    q = run(sessions_with_timeout(sdf)
+            .writeStream.format("memory").outputMode("append"),
+            "sesstimeout", expected_rows=total, min_batches=3)
+    final = spark.table(q.name)
     return final.select("key", "session_start", "session_last", "n_events")
 
 
@@ -2892,9 +2773,10 @@ def dis_state_totals_tws_streamed(spark: SparkSession,
         sdf = (spark.readStream.format("dis")
                .option("path", log.root).option("stream", log.stream)
                .load())
-        final = _drain_to_memory(
-            spark, running_totals_transform_with_state(sdf),
-            "tws_totals_stream", output_mode="update")
+        q = run(running_totals_transform_with_state(sdf)
+                .writeStream.format("memory").outputMode("update"),
+                "tws_totals_stream", available_now=True)
+        final = spark.table(q.name)
     w = Window.partitionBy("key").orderBy(F.desc("n_events"))
     return (final.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
@@ -2961,9 +2843,10 @@ def dis_state_timers_tws_streamed(spark: SparkSession,
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
-        final = _drain_multibatch(spark, sessions_with_timers_tws(sdf),
-                                  "sesstimers", output_mode="append",
-                                  expected_rows=total)
+        q = run(sessions_with_timers_tws(sdf)
+                .writeStream.format("memory").outputMode("append"),
+                "sesstimers", expected_rows=total, min_batches=3)
+        final = spark.table(q.name)
     return final.select("key", "session_start", "session_last", "n_events")
 
 
@@ -2998,57 +2881,41 @@ def dis_stream_dedup_tws_streamed(spark: SparkSession,
     data batches asserted across the two phases. Scale posture in
     streaming/stateful.dedup_first_seen_tws: state is one small entry
     per distinct hash, TTL or a Bloom front-stage bounds it at 100 TB."""
-    import shutil
-    import uuid
-
-    from ..streaming.drain import (
-        await_progress, drain_available, resume_floor, stop_query,
-    )
     from ..streaming.stateful import dedup_first_seen_tws
 
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     per = max(-(-total // 6), 1)
     out = scratch_dir("streamdedup_out_")
-    ckpt = scratch_dir("streamdedup_ckpt_")
-    name = f"streamdedup_{uuid.uuid4().hex[:8]}"
 
-    def start():
+    def writer():
         sdf = (spark.readStream.format("dis")
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
         return (dedup_first_seen_tws(sdf)
                 .writeStream.format("parquet").option("path", out)
-                .queryName(name).outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime="0 seconds").start())
+                .outputMode("append"))
 
-    q = None
-    with _rocksdb_state(spark):
-        try:
-            q = start()
-            await_progress(q, "stream-dedup phase 1")
-            q.stop()                            # kill mid-backlog
-            q.awaitTermination(60)
-            batches1 = sum(1 for p in q.recentProgress
-                           if p["numInputRows"] > 0)
-            # Count floor from the checkpoint WAL (r11 verdict #5): the
-            # kill point is nondeterministic but recorded — the resume
-            # must consume at least the uncommitted remainder.
-            floor = resume_floor(ckpt, total)
-            q = start()
-            batches2 = drain_available(q, timeout_seconds=300,
-                                       expected_rows=floor)
-            if batches1 + batches2 < 3:
-                raise AssertionError(
-                    f"stream-dedup drained in {batches1}+{batches2} data "
-                    "batches; the multi-batch gate requires >= 3")
-            final = spark.read.parquet(out)
-        finally:
-            stop_query(q)
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return final.select("vh", "value")
+    with _rocksdb_state(spark), streams("streamdedup") as owner:
+        ckpt = owner.checkpoint()
+        q = owner.start(writer(), ckpt=ckpt)
+        await_progress(q, "stream-dedup phase 1")
+        q.stop()                                # kill mid-backlog
+        q.awaitTermination(60)
+        batches1 = sum(1 for p in q.recentProgress
+                       if p["numInputRows"] > 0)
+        # Count floor from the checkpoint WAL (r11 verdict #5): the kill
+        # point is nondeterministic but recorded — the resume must
+        # consume at least the uncommitted remainder.
+        floor = resume_floor(ckpt, total)
+        batches2 = owner.drain(owner.start(writer(), ckpt=ckpt),
+                               expected_rows=floor)
+    if batches1 + batches2 < 3:
+        raise AssertionError(
+            f"stream-dedup drained in {batches1}+{batches2} data "
+            "batches; the multi-batch gate requires >= 3")
+    return spark.read.parquet(out).select("vh", "value")
 
 
 _ANN_LOG_PARTS = 3
@@ -3127,8 +2994,9 @@ def dis_backfill_handoff_streamed(spark: SparkSession,
            .load()
            .select(*cols, F.date_format("timestamp", TS_FMT_SPARK)
                    .alias("ts_utc")))
-    tail = (_drain_to_memory(spark, sdf, "handoff_tail",
-                             output_mode="append")
+    q = run(sdf.writeStream.format("memory")
+            .outputMode("append"), "handoff_tail", available_now=True)
+    tail = (spark.table(q.name)
             .withColumn("phase", F.lit("tail")))
     return backfill.unionByName(tail)
 
@@ -3167,9 +3035,10 @@ def dis_cdc_feed_tws_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
-        feed = _drain_multibatch(spark, cdc_changes_tws(sdf), "cdcfeed",
-                                 output_mode="append",
-                                 expected_rows=total)
+        q = run(cdc_changes_tws(sdf)
+                .writeStream.format("memory").outputMode("append"),
+                "cdcfeed", expected_rows=total, min_batches=3)
+        feed = spark.table(q.name)
     return feed.select(
         "key", "offset", "prev_value", "value",
         (~F.col("prev_value").eqNullSafe(F.col("value"))).alias("is_change"))
@@ -3206,9 +3075,6 @@ def dis_tws_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
        data batch commits (>= 2 total before the final resume);
     3. unthrottled drain to idle under the SAME RocksDB provider.
     """
-    import uuid
-
-    from ..streaming.drain import kill_resume
     from ..streaming.stateful import cdc_changes_tws
 
     log = _materialized_log(spark, sf_dir)
@@ -3216,7 +3082,7 @@ def dis_tws_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_trigger = max(total // 6, 1)
     out = scratch_dir("twsrestart_out_")
     ckpt = scratch_dir("twsrestart_ckpt_")
-    name = f"twsrestart_{uuid.uuid4().hex[:8]}"
+    name = query_name("twsrestart")
 
     def start(trigger: dict, rate_limited: bool):
         r = (spark.readStream.format("dis")
@@ -3325,34 +3191,21 @@ def dis_upsert_view_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted so the view provably accreted incrementally."""
     import shutil
 
-    from ..streaming.drain import drain_available
-
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     per = max(-(-total // 5), 1)
     view = scratch_dir("upsert_view_")
     shutil.rmtree(view)       # read-side existence check needs it absent
-    ckpt = scratch_dir("upsert_ckpt_")
 
     def upsert(bdf, batch_id):
         upsert_view_batch(bdf, view, _UPSERT_BUCKETS)
 
-    try:
-        sdf = (spark.readStream.format("dis")
-               .option("path", log.root).option("stream", log.stream)
-               .option("maxOffsetsPerTrigger", str(per))
-               .load())
-        q = (sdf.writeStream.foreachBatch(upsert)
-             .option("checkpointLocation", ckpt)
-             .trigger(processingTime="0 seconds").start())
-        batches = drain_available(q, timeout_seconds=300,
-                                  expected_rows=total)
-        if batches < 3:
-            raise AssertionError(
-                f"upsert view built in {batches} data batches; "
-                "the multi-batch gate requires >= 3")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    sdf = (spark.readStream.format("dis")
+           .option("path", log.root).option("stream", log.stream)
+           .option("maxOffsetsPerTrigger", str(per))
+           .load())
+    run(sdf.writeStream.foreachBatch(upsert), "upsert",
+        expected_rows=total, min_batches=3)
     return (spark.read.parquet(view)
             .select("key", "last_value", "last_offset"))
 
@@ -3405,9 +3258,9 @@ def _register_stream_neardup():
                 F.col("key").cast("bigint").alias("doc_id"),
                 F.col("value").alias("text"))
             pairs = lsh_bucket_pairs_tws(streaming_band_rows(parsed))
-            drained = _drain_multibatch(spark, pairs, "lshstream",
-                                        output_mode="append",
-                                        expected_rows=total)
+            q = run(pairs.writeStream.format("memory").outputMode("append"),
+                    "lshstream", expected_rows=total, min_batches=3)
+            drained = spark.table(q.name)
         cand = drained.select("doc_a", "doc_b").distinct()
         # filtered=False: cand only names docs that produced band rows,
         # so the empty-set guard is dead weight on the verify scan (its
@@ -3470,7 +3323,6 @@ def _register_ann_ingest():
         column the search never selects."""
         import shutil
 
-        from ..streaming.drain import drain_available
         from .similarity import _ivf_ingest_batch, _ivf_search_prebuilt
         from .similarity import ann_base_index_root
 
@@ -3496,26 +3348,14 @@ def _register_ann_ingest():
                  .alias("r")).select("r.vec_id", "r.e"))
             _ivf_ingest_batch(parsed, cent, ingest_root, batch_id)
 
-        ckpt = scratch_dir("ann_ingest_ckpt_")
-        try:
-            sdf = (spark.readStream.format("dis")
-                   .option("path", log.root).option("stream", log.stream)
-                   .option("maxOffsetsPerTrigger", str(per))
-                   .load())
-            q = (sdf.writeStream.foreachBatch(ingest)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(processingTime="0 seconds").start())
-            # pure foreachBatch ingest — no timers/watermarks, so the
-            # count target alone proves drained (no idle-tail wait)
-            batches = drain_available(q, timeout_seconds=300,
-                                      expected_rows=total,
-                                      stop_at_count=True)
-            if batches < 3:
-                raise AssertionError(
-                    f"ann ingest drained in {batches} data batches; "
-                    "the multi-batch gate requires >= 3")
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        sdf = (spark.readStream.format("dis")
+               .option("path", log.root).option("stream", log.stream)
+               .option("maxOffsetsPerTrigger", str(per))
+               .load())
+        # pure foreachBatch ingest — no timers/watermarks, so the count
+        # target alone proves drained (no idle-tail wait)
+        run(sdf.writeStream.foreachBatch(ingest), "ann_ingest",
+            expected_rows=total, stop_at_count=True, min_batches=3)
         return _ivf_search_prebuilt(spark, sf_dir, n_probe=1,
                                     root=ingest_root)
 
@@ -3581,7 +3421,6 @@ def _register_ann_retrain():
         the repair)."""
         import shutil
 
-        from ..streaming.drain import drain_available
         from .similarity import (
             IVF_RETRAIN_SKEW,
             _ivf_ingest_batch,
@@ -3626,27 +3465,15 @@ def _register_ann_retrain():
             mid_fired.append(ivf_maybe_retrain(
                 spark, ingest_root, skew_threshold=IVF_RETRAIN_SKEW))
 
-        ckpt = scratch_dir("ann_retrain_ckpt_")
-        try:
-            sdf = (spark.readStream.format("dis")
-                   .option("path", log.root).option("stream", log.stream)
-                   .option("maxOffsetsPerTrigger", str(per))
-                   .load())
-            q = (sdf.writeStream.foreachBatch(ingest)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(processingTime="0 seconds").start())
-            # pure foreachBatch ingest + in-loop gate probe — no
-            # timers/watermarks, so the count target alone proves
-            # drained (no idle-tail wait)
-            batches = drain_available(q, timeout_seconds=300,
-                                      expected_rows=total,
-                                      stop_at_count=True)
-            if batches < 3:
-                raise AssertionError(
-                    f"ann retrain drained in {batches} data batches; "
-                    "the multi-batch gate requires >= 3")
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        sdf = (spark.readStream.format("dis")
+               .option("path", log.root).option("stream", log.stream)
+               .option("maxOffsetsPerTrigger", str(per))
+               .load())
+        # pure foreachBatch ingest + in-loop gate probe — no
+        # timers/watermarks, so the count target alone proves drained
+        # (no idle-tail wait)
+        run(sdf.writeStream.foreachBatch(ingest), "ann_retrain",
+            expected_rows=total, stop_at_count=True, min_batches=3)
         if any(mid_fired):
             raise AssertionError(
                 "production drift gate fired mid-stream on the uniform "
@@ -3729,9 +3556,6 @@ def _register_ann_query():
         Reference crosswalk: createDirectStream (DISUtils.scala) feeding
         per-batch downstream compute is exactly this foreachBatch shape;
         the search itself is engine-side."""
-        import shutil
-
-        from ..streaming.drain import drain_available
         from .similarity import (
             _ivf_index_root,
             _ivf_search_for_queries,
@@ -3753,23 +3577,12 @@ def _register_ann_query():
             res = _ivf_search_for_queries(inverted, cent, q, n_probe=1)
             res.write.mode("overwrite").parquet(f"{out}/src=b{batch_id}")
 
-        ckpt = scratch_dir("ann_query_ckpt_")
-        try:
-            sdf = (spark.readStream.format("dis")
-                   .option("path", qlog.root).option("stream", qlog.stream)
-                   .option("maxOffsetsPerTrigger", str(per))
-                   .load())
-            q = (sdf.writeStream.foreachBatch(search)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(processingTime="0 seconds").start())
-            batches = drain_available(q, timeout_seconds=300,
-                                      expected_rows=total)
-            if batches < 3:
-                raise AssertionError(
-                    f"ann query stream drained in {batches} data batches; "
-                    "the multi-batch gate requires >= 3")
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        sdf = (spark.readStream.format("dis")
+               .option("path", qlog.root).option("stream", qlog.stream)
+               .option("maxOffsetsPerTrigger", str(per))
+               .load())
+        run(sdf.writeStream.foreachBatch(search), "ann_query",
+            expected_rows=total, min_batches=3)
         return (spark.read.parquet(out)
                 .select("query_id", "neighbor_id",
                         (F.col("cos") + 0.0).alias("cos"), "rnk"))
@@ -3807,9 +3620,6 @@ def dis_fanout_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     recast as the idiomatic Structured Streaming fanout: foreachBatch is
     the one place a single stream may feed several sinks, and per-sink
     txn idempotence is what upgrades its at-least-once to exactly-once."""
-    import uuid
-
-    from ..streaming.drain import drain_available
     from ..functions.portable import portable_hash as phash
 
     log = _materialized_log(spark, sf_dir)
@@ -3819,7 +3629,6 @@ def dis_fanout_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         root = scratch_dir(f"dis_fan_{sink}_")
         DisLog(root, sink).create(DEFAULT_NUM_PARTITIONS)
         roots[sink] = root
-    ckpt = scratch_dir("dis_fan_ckpt_")
     sdf = (spark.readStream.format("dis")
            .option("path", log.root).option("stream", log.stream)
            .option("maxOffsetsPerTrigger", str(max(total // 4, 1)))
@@ -3837,11 +3646,7 @@ def dis_fanout_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .option("segmentRows", "2000")
                  .mode("append").save())
 
-    q = (sdf.writeStream.foreachBatch(fan_out)
-         .option("checkpointLocation", ckpt)
-         .queryName(f"fanout_{uuid.uuid4().hex[:8]}")
-         .trigger(processingTime="0 seconds").start())
-    drain_available(q, timeout_seconds=180, expected_rows=total)
+    run(sdf.writeStream.foreachBatch(fan_out), "fanout", expected_rows=total)
     parts = []
     for sink in ("hot", "cold"):
         df = (spark.read.format("dis")
@@ -3955,9 +3760,6 @@ def dis_state_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final emitted session set must equal dis_state_timeout_streamed's
     oracle exactly: a lost open session, a re-emitted closed one, or a
     timeout that failed to re-arm after restart each breaks the hash."""
-    import uuid
-
-    from ..streaming.drain import kill_resume
     from ..streaming.stateful import sessions_with_timeout
 
     log = _materialized_ordered_log(spark, sf_dir)
@@ -3965,7 +3767,7 @@ def dis_state_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_trigger = max(total // 6, 1)
     out = scratch_dir("staterestart_out_")
     ckpt = scratch_dir("staterestart_ckpt_")
-    name = f"staterestart_{uuid.uuid4().hex[:8]}"
+    name = query_name("staterestart")
 
     def start(trigger: dict, rate_limited: bool):
         r = (spark.readStream.format("dis")
@@ -4019,8 +3821,9 @@ def dis_union_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (a.unionByName(b)
               .groupBy("stream", "key")
               .agg(F.count(F.lit(1)).alias("n")))
-    final = _drain_to_memory(spark, counts, "union_stream",
-                             output_mode="complete")
+    q = run(counts.writeStream.format("memory")
+            .outputMode("complete"), "union_stream", available_now=True)
+    final = spark.table(q.name)
     return final.select("stream", "key", "n")
 
 
@@ -4421,7 +4224,9 @@ def dis_timestamp_subscribe_streamed(spark: SparkSession,
     env = sdf.select(
         "partition", "offset", "key", "value",
         F.date_format("timestamp", TS_FMT_SPARK).alias("ts_utc"))
-    final = _drain_to_memory(spark, env, "tssub", output_mode="append")
+    q = run(env.writeStream.format("memory")
+            .outputMode("append"), "tssub", available_now=True)
+    final = spark.table(q.name)
     return final
 
 
@@ -4452,10 +4257,6 @@ def dis_tail_subscribe_streamed(spark: SparkSession,
     phase-2 record missed, breaks the hash. Producer-mode offsets are
     commit-order-dependent and deliberately not projected
     (dis_producer_roundtrip's contract)."""
-    import shutil
-    import uuid
-
-    from ..streaming.drain import await_progress, drain_available, stop_query
     from ..tables import load_events
 
     _register_dis(spark)
@@ -4475,28 +4276,19 @@ def dis_tail_subscribe_streamed(spark: SparkSession,
          .mode("append").save())
 
     produce(phase1)
-    name = f"tail_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("tail_ckpt_")
     sdf = (spark.readStream.format("dis")
            .option("path", root).option("stream", "tail")
            .option("startingOffsets", "latest").load())
-    q = (sdf.select("partition", "key", "value", "timestamp")
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="0 seconds").start())
-    try:
+    with streams("tail") as owner:
+        q = owner.start(sdf.select("partition", "key", "value", "timestamp")
+                        .writeStream.format("memory").outputMode("append"))
         # the first progress event proves the tail position was captured
         await_progress(q, "tail subscribe", timeout_seconds=60, data=False)
         produce(phase2)
         # count-polling target: the latest-start subscription must see
         # exactly the phase-2 slice
-        drain_available(q, timeout_seconds=120,
-                        expected_rows=phase2.count())
-    finally:
-        stop_query(q)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return (spark.table(name)
+        owner.drain(q, expected_rows=phase2.count())
+    return (spark.table(q.name)
             .select("partition", "key", "value",
                     F.date_format("timestamp", TS_FMT_SPARK)
                     .alias("ts_utc")))
@@ -4642,12 +4434,8 @@ def dis_maintenance_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrites the layout under it; the resumed unthrottled drain
     finishes. Any lost/doubled record across the layout change breaks
     the word-count hash."""
-    import shutil
-    import uuid
-
     from ..sources.dis_log import create_log_from_events, \
         merge_small_segments
-    from ..streaming.drain import drain_available, resume_floor
     from ..streaming.queries import running_wordcount
 
     _register_dis(spark)
@@ -4656,25 +4444,18 @@ def dis_maintenance_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, f"{sf_dir}/events.parquet", root, stream="maint",
         segment_rows=100)                      # deliberately tiny files
     total = sum(log.latest_offsets().values())
-    name = f"maint_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("maint_ckpt_")
 
-    def start(rate_limited: bool, trigger: dict):
+    def writer(rate_limited: bool):
         r = (spark.readStream.format("dis")
              .option("path", root).option("stream", "maint"))
         if rate_limited:
             r = r.option("maxOffsetsPerTrigger", str(max(total // 4, 1)))
         return (running_wordcount(r.load())
-                .writeStream.format("memory").queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(**trigger).start())
+                .writeStream.format("memory").outputMode("complete"))
 
-    try:
-        q = start(True, {"availableNow": True})
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("maintenance phase 1 did not terminate")
+    with streams("maint") as owner:
+        ckpt = owner.checkpoint()
+        owner.drain(owner.start(writer(True), available_now=True, ckpt=ckpt))
         eliminated = merge_small_segments(log, target_rows=2000)
         assert sum(eliminated.values()) > 0, \
             "maintenance merged nothing — gate is vacuous"
@@ -4682,11 +4463,9 @@ def dis_maintenance_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # availableNow prefix is nondeterministic in size but recorded —
         # the resume must consume at least the uncommitted remainder.
         floor = resume_floor(ckpt, total)
-        q = start(False, {"processingTime": "0 seconds"})
-        drain_available(q, timeout_seconds=180, expected_rows=floor)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+        q = owner.start(writer(False), ckpt=ckpt)
+        owner.drain(q, expected_rows=floor)
+    return spark.table(q.name)
 
 
 @register(
@@ -4797,9 +4576,10 @@ def dis_rocksdb_state_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
-        final = _drain_multibatch(spark, running_wordcount(sdf),
-                                  "rocksdb_wc", output_mode="complete",
-                                  expected_rows=total)
+        q = run(running_wordcount(sdf)
+                .writeStream.format("memory").outputMode("complete"),
+                "rocksdb_wc", expected_rows=total, min_batches=3)
+        final = spark.table(q.name)
     finally:
         if prev is None:
             spark.conf.unset(conf_key)
@@ -4841,50 +4621,28 @@ def dis_consumer_groups_streamed(spark: SparkSession,
     concurrent access — the consumer-cache reuse the reference built
     its locality machinery for (DISDataConsumer.scala:259-405), here
     exercised for safety rather than placement."""
-    import shutil
-    import uuid
-
-    from ..streaming.drain import drain_available
     from ..streaming.queries import running_wordcount
 
     log = _materialized_log(spark, sf_dir)
     total = sum(log.latest_offsets().values())
     per = max(-(-total // 4), 1)
-    names, ckpts, queries = [], [], []
-    try:
-        for group in ("a", "b"):
-            name = f"cg{group}_{uuid.uuid4().hex[:8]}"
-            ckpt = scratch_dir(f"cg{group}_ckpt_")
+    # one owner for both groups: if the first drain raises, the second
+    # query is stopped before either checkpoint is removed
+    with streams("cg") as owner:
+        queries = []
+        for _ in range(2):
             sdf = (spark.readStream.format("dis")
                    .option("path", log.root).option("stream", log.stream)
                    .option("maxOffsetsPerTrigger", str(per))
                    .load())
-            q = (running_wordcount(sdf)
-                 .writeStream.format("memory").queryName(name)
-                 .outputMode("complete")
-                 .option("checkpointLocation", ckpt)
-                 .trigger(processingTime="0 seconds").start())
-            names.append(name)
-            ckpts.append(ckpt)
-            queries.append(q)
+            queries.append(owner.start(
+                running_wordcount(sdf)
+                .writeStream.format("memory").outputMode("complete")))
         for q in queries:
-            drain_available(q, timeout_seconds=180, expected_rows=total)
-    finally:
-        # Stop BOTH queries before deleting their checkpoints: if the
-        # first drain times out or raises, the second query is still
-        # committing — rmtree under a live query would cascade checkpoint
-        # errors that mask the original failure.
-        for q in queries:
-            try:
-                q.stop()
-                q.awaitTermination(30)
-            except Exception:
-                pass
-        for ckpt in ckpts:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    a = spark.table(names[0]).select(
+            owner.drain(q, expected_rows=total)
+    a = spark.table(queries[0].name).select(
         "word", F.col("n").alias("n_group_a"))
-    b = spark.table(names[1]).select(
+    b = spark.table(queries[1].name).select(
         F.col("word").alias("word_b"), F.col("n").alias("n_group_b"))
     return (a.join(b, F.col("word") == F.col("word_b"), "full_outer")
             .select(F.coalesce("word", "word_b").alias("word"),
@@ -4920,11 +4678,7 @@ def dis_partition_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the topology changed. One record missed on the new partition, read
     twice on the old ones, or started at the wrong offset breaks the
     hash."""
-    import shutil
-    import uuid
-
     from ..sources.dis_log import create_log_from_events
-    from ..streaming.drain import await_progress, drain_available, stop_query
     from ..tables import load_events
 
     _register_dis(spark)
@@ -4932,16 +4686,12 @@ def dis_partition_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     create_log_from_events(spark, f"{sf_dir}/events.parquet", root,
                            segment_rows=2000)
     log = DisLog(root, "events")
-    name = f"padd_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("padd_ckpt_")
     sdf = (spark.readStream.format("dis")
            .option("path", root).option("stream", "events").load())
-    q = (sdf.select("partition", "offset", "key", "value", "timestamp")
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="0 seconds").start())
-    try:
+    with streams("padd") as owner:
+        q = owner.start(
+            sdf.select("partition", "offset", "key", "value", "timestamp")
+            .writeStream.format("memory").outputMode("append"))
         # consumption is underway before the partition is added
         await_progress(q, "partition-add gate", timeout_seconds=60,
                        data=False)
@@ -4959,12 +4709,8 @@ def dis_partition_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("ts").alias("timestamp")),
             ["event_id"]).select(*_ENV_COLS)
         write_with_offsets(env, root, "events", 1, 2000)
-        drain_available(q, timeout_seconds=180,
-                        expected_rows=total0 + n_aux)
-    finally:
-        stop_query(q)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return (spark.table(name)
+        owner.drain(q, expected_rows=total0 + n_aux)
+    return (spark.table(q.name)
             .select("partition", "offset", "key", "value",
                     F.date_format("timestamp", TS_FMT_SPARK)
                     .alias("ts_utc")))
@@ -4999,29 +4745,21 @@ def dis_pattern_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumption started before the second stream existed, so plan-time
     matching alone (the batch reader's semantics, the r8 'partial')
     cannot pass."""
-    import shutil
-    import uuid
-
     from ..sources.dis_log import create_log_from_events
-    from ..streaming.drain import await_progress, drain_available, stop_query
     from ..tables import load_events
 
     _register_dis(spark)
     root = scratch_dir("dis_patlog_")
     create_log_from_events(spark, f"{sf_dir}/events.parquet", root,
                            segment_rows=2000)
-    name = f"pat_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("pat_ckpt_")
     sdf = (spark.readStream.format("dis")
            .option("path", root).option("subscribePattern", "events.*")
            .load())
-    q = (sdf.select("stream", "partition", "offset", "key", "value",
-                    "timestamp")
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="0 seconds").start())
-    try:
+    with streams("pat") as owner:
+        q = owner.start(
+            sdf.select("stream", "partition", "offset", "key", "value",
+                       "timestamp")
+            .writeStream.format("memory").outputMode("append"))
         # consumption is underway before the second stream exists
         await_progress(q, "pattern gate", timeout_seconds=60, data=False)
         total0 = sum(DisLog(root, "events").latest_offsets().values())
@@ -5038,12 +4776,8 @@ def dis_pattern_add_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("ts").alias("timestamp")),
             ["event_id"]).select(*_ENV_COLS)
         write_with_offsets(env, root, "events_aux", 1, 2000)
-        drain_available(q, timeout_seconds=180,
-                        expected_rows=total0 + n_aux)
-    finally:
-        stop_query(q)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return (spark.table(name)
+        owner.drain(q, expected_rows=total0 + n_aux)
+    return (spark.table(q.name)
             .select("stream", "partition", "offset", "key", "value",
                     F.date_format("timestamp", TS_FMT_SPARK)
                     .alias("ts_utc")))
@@ -5103,9 +4837,7 @@ def dis_pattern_revoke_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     satisfy the drain heuristic before phase 3's data arrived)."""
     import shutil
     import time as _time
-    import uuid
 
-    from ..streaming.drain import stop_query
     from ..tables import load_events
 
     _register_dis(spark)
@@ -5135,38 +4867,31 @@ def dis_pattern_revoke_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_with_offsets(_half_env(F.col("event_id") % 7 == 0, 0), root,
                        "revk_aux", 1, 2000)
 
-    name = f"revk_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("revk_ckpt_")
     sdf = (spark.readStream.format("dis")
            .option("path", root).option("subscribePattern", "revk_.*")
            .load())
-    q = (sdf.select("stream", "partition", "offset", "key", "value",
-                    "timestamp")
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="0 seconds").start())
 
-    def _await_rows(expected: int, what: str, timeout: float = 120.0):
+    def _await_rows(q, expected: int, what: str, timeout: float = 120.0):
         deadline = _time.monotonic() + timeout
         while _time.monotonic() < deadline:
             if q.exception() is not None:
                 raise q.exception()
-            if spark.table(name).count() >= expected:
+            if spark.table(q.name).count() >= expected:
                 return
             _time.sleep(0.1)
         raise TimeoutError(f"pattern-revoke gate: {what} not drained")
 
-    try:
-        _await_rows(n_m1 + n_aux, "phase 1 (both streams)")
+    with streams("revk") as owner:
+        q = owner.start(
+            sdf.select("stream", "partition", "offset", "key", "value",
+                       "timestamp")
+            .writeStream.format("memory").outputMode("append"))
+        _await_rows(q, n_m1 + n_aux, "phase 1 (both streams)")
         shutil.rmtree(os.path.join(root, "revk_aux"))   # the revoke
         write_with_offsets(_half_env(F.col("event_id") % 2 == 1, n_m1),
                            root, "revk_main", 1, 2000)
-        _await_rows(n_m1 + n_m2 + n_aux, "phase 3 (post-revoke main)")
-    finally:
-        stop_query(q)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return (spark.table(name)
+        _await_rows(q, n_m1 + n_m2 + n_aux, "phase 3 (post-revoke main)")
+    return (spark.table(q.name)
             .select("stream", "partition", "offset", "key", "value",
                     F.date_format("timestamp", TS_FMT_SPARK)
                     .alias("ts_utc")))
@@ -6760,9 +6485,10 @@ def dis_anomaly_zscore_tws_streamed(spark: SparkSession,
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
-        final = _drain_multibatch(spark, zscore_gate_tws(sdf), "zgate",
-                                  output_mode="append",
-                                  expected_rows=total)
+        q = run(zscore_gate_tws(sdf)
+                .writeStream.format("memory").outputMode("append"),
+                "zgate", expected_rows=total, min_batches=3)
+        final = spark.table(q.name)
     return final.select("offset", "key", "value", "z")
 
 
@@ -6826,9 +6552,10 @@ def dis_holt_tws_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
-        drained = _drain_multibatch(spark, holt_gate_tws(sdf), "holtgate",
-                                    output_mode="update",
-                                    expected_rows=total)
+        q = run(holt_gate_tws(sdf)
+                .writeStream.format("memory").outputMode("update"),
+                "holtgate", expected_rows=total, min_batches=3)
+        drained = spark.table(q.name)
     w = Window.partitionBy("key").orderBy(F.desc("n_events"))
     return (drained.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
@@ -6909,9 +6636,10 @@ def dis_cusum_tws_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
-        drained = _drain_multibatch(spark, cusum_gate_tws(sdf), "cusumgate",
-                                    output_mode="update",
-                                    expected_rows=total)
+        q = run(cusum_gate_tws(sdf)
+                .writeStream.format("memory").outputMode("update"),
+                "cusumgate", expected_rows=total, min_batches=3)
+        drained = spark.table(q.name)
     w = Window.partitionBy("key").orderBy(F.desc("n_events"))
     return (drained.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
@@ -6968,9 +6696,10 @@ def dis_topk_tws_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
-        drained = _drain_multibatch(spark, topk_gate_tws(sdf), "topkgate",
-                                    output_mode="update",
-                                    expected_rows=total)
+        q = run(topk_gate_tws(sdf)
+                .writeStream.format("memory").outputMode("update"),
+                "topkgate", expected_rows=total, min_batches=3)
+        drained = spark.table(q.name)
     w = Window.partitionBy("key").orderBy(F.desc("n_events"))
     return (drained.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
@@ -7188,9 +6917,10 @@ def dis_psi_drift_tws_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.date_format("timestamp", "yyyy-MM-dd")
                        .alias("win"),
                        "offset", "value"))
-        drained = _drain_multibatch(spark, psi_gate_tws(env, edges),
-                                    "psigate", output_mode="update",
-                                    expected_rows=total)
+        q = run(psi_gate_tws(env, edges)
+                .writeStream.format("memory").outputMode("update"),
+                "psigate", expected_rows=total, min_batches=3)
+        drained = spark.table(q.name)
     return _psi_score_board(drained, ref_long)
 
 
@@ -7248,7 +6978,6 @@ def dis_psi_drift_restart_streamed(spark: SparkSession,
     directories, the final board per cell is its max-n_cur emission,
     scored by the SAME broadcast-reference PSI tail and hash-matched
     against the SAME batch oracle as the live gate."""
-    from ..streaming.drain import kill_resume
     from ..streaming.stateful import psi_gate_tws
 
     ref_long, edges = _psi_reference(spark, sf_dir)
@@ -7352,9 +7081,10 @@ def dis_sample_tws_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                .option("path", log.root).option("stream", log.stream)
                .option("maxOffsetsPerTrigger", str(per))
                .load())
-        drained = _drain_multibatch(spark, sample_gate_tws(sdf),
-                                    "samplegate", output_mode="update",
-                                    expected_rows=total)
+        q = run(sample_gate_tws(sdf)
+                .writeStream.format("memory").outputMode("update"),
+                "samplegate", expected_rows=total, min_batches=3)
+        drained = spark.table(q.name)
     w = Window.partitionBy("key", "rnk").orderBy(F.desc("n_seen"))
     return (drained.withColumn("rn", F.row_number().over(w))
             .where((F.col("rn") == 1) & (F.col("rnk") <= SAMPLE_TWS_K))
@@ -7383,7 +7113,6 @@ def dis_sample_restart_streamed(spark: SparkSession,
     update-mode gate), and the declared result is each (key, rank)'s
     final-board row, hash-matched against the SAME batch bottom-k
     oracle as the live gate."""
-    from ..streaming.drain import kill_resume
     from ..streaming.stateful import sample_gate_tws
 
     log = _materialized_typed_value_log(spark, sf_dir)

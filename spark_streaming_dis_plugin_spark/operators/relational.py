@@ -3834,40 +3834,22 @@ def customer_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     the local-sum and totals branches see the SAME partitioning
     (repartitionByRange samples; shuffle-fetch order could otherwise
     legally re-draw boundaries between the two jobs), which also
-    truncates the lineage the way connected components does.
+    truncates the lineage the way connected components does. That
+    two-pass is statistics._two_pass_cumsum with no group columns.
 
     Reference scope: delegated relational analytics (SURVEY.md S2b).
     """
+    from .statistics import _two_pass_cumsum
+
     (orders,) = _t(spark, sf_dir, "orders")
-    nb = spark.sparkContext.defaultParallelism
     cust = (orders.groupBy("o_custkey")
-            .agg(dsum("o_totalprice", 2).alias("rev")))
-    bucketed = (cust.repartitionByRange(nb, F.desc("rev"), F.asc("o_custkey"))
-                .withColumn("pid", F.spark_partition_id())
-                .localCheckpoint())
-    local_w = (Window.partitionBy("pid")
-               .orderBy(F.desc("rev"), "o_custkey")
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    local = bucketed.select(
-        "o_custkey", "rev", "pid",
-        F.sum(F.col("rev").cast("decimal(27,2)")).over(local_w)
-         .alias("lcum"))
-    ptot = (bucketed.groupBy("pid")
-            .agg(F.sum(F.col("rev").cast("decimal(27,2)")).alias("ptot")))
-    cum_w = (Window.orderBy("pid")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    tot_w = Window.partitionBy()
-    carries = ptot.select(
-        "pid",
-        (F.sum("ptot").over(cum_w) - F.col("ptot")).alias("carry"),
-        F.sum("ptot").over(tot_w).cast("double").alias("tot_rev"))
-    ranked = (local.join(F.broadcast(carries), "pid")
-              .select("o_custkey", "rev",
-                      (F.col("lcum") + F.col("carry"))
-                      .cast("double").alias("cum_rev"),
-                      "tot_rev"))
-    share = F.col("cum_rev") / F.col("tot_rev")
-    return ranked.select(
+            .agg(dsum("o_totalprice", 2).alias("rev"))
+            .withColumn("rev27", F.col("rev").cast("decimal(27,2)")))
+    cum = _two_pass_cumsum(spark, cust, [],
+                           [F.desc("rev"), F.asc("o_custkey")],
+                           {"rev": "rev27"})
+    share = F.col("cum_rev").cast("double") / F.col("tot_rev").cast("double")
+    return cum.select(
         "o_custkey", "rev", share.alias("cum_share"),
         F.when(share <= 0.8, "A").when(share <= 0.95, "B")
          .otherwise("C").alias("abc_class"))

@@ -29,6 +29,11 @@ timeouts, append-mode window flush) emit on no-data batches AFTER the
 last input row. Count-polling makes early stop impossible; the idle
 tail keeps flush semantics intact.
 
+:func:`streams` is the one owner of a streamed gate's queries and
+checkpoints: it names each query, allocates its checkpoint, starts it on
+a trigger, drains it (:meth:`StreamOwner.drain`), and on the way out
+stops every query it started before it removes any checkpoint.
+:func:`run` is that owner for the one-query case.
 :func:`kill_resume` is the one kill/resume protocol every restart gate
 runs over its checkpoint, and :func:`await_progress` the one wait for a
 live query's first progress event.
@@ -40,6 +45,10 @@ import json
 import os
 import shutil
 import time
+import uuid
+from contextlib import contextmanager
+
+from ..scratch import scratch_dir
 
 
 def checkpoint_committed_rows(ckpt: str) -> int | None:
@@ -219,6 +228,117 @@ def stop_query(query) -> None:
         pass
 
 
+def query_name(label: str) -> str:
+    """A streaming-query name unique in the session: ``<label>_<hex>``."""
+    return f"{label}_{uuid.uuid4().hex[:8]}"
+
+
+def await_available_now(query, label: str, timeout_seconds: float) -> None:
+    """Wait for an ``availableNow`` query to terminate by itself; one that
+    does not within ``timeout_seconds`` raises ``TimeoutError`` naming
+    ``label`` (the caller's cleanup stops it). A query failure is
+    re-raised by ``awaitTermination``."""
+    if not query.awaitTermination(timeout_seconds):
+        raise TimeoutError(f"{label}: availableNow run did not terminate "
+                           f"within {timeout_seconds}s")
+
+
+# One drain deadline for every owned query, the longest any gate used
+# before the owner existed; a query still draining after it is reported
+# as hung.
+GATE_TIMEOUT_SECONDS = 300.0
+
+
+class StreamOwner:
+    """The queries one gate starts and the checkpoints they run on.
+
+    Each checkpoint carries one query name, so every run restarted on a
+    checkpoint keeps its name. Use through :func:`streams`, which calls
+    :meth:`close` whichever step raises."""
+
+    def __init__(self, label: str):
+        self.label = label
+        self._names: dict[str, str] = {}       # checkpoint -> query name
+        self._queries: list = []
+        self._available_now: set[int] = set()
+
+    def checkpoint(self) -> str:
+        """A new scratch checkpoint owned (and removed) by this owner."""
+        ckpt = scratch_dir(f"{self.label}_ckpt_")
+        self._names[ckpt] = query_name(self.label)
+        return ckpt
+
+    def start(self, writer, *, available_now: bool = False,
+              ckpt: str | None = None):
+        """Start ``writer`` (a ``DataStreamWriter``) on ``ckpt`` — a new
+        checkpoint unless given — under an ``availableNow`` or a
+        ``0 seconds`` processing-time trigger."""
+        ckpt = ckpt or self.checkpoint()
+        trigger = ({"availableNow": True} if available_now
+                   else {"processingTime": "0 seconds"})
+        query = (writer.queryName(self._names[ckpt])
+                 .option("checkpointLocation", ckpt)
+                 .trigger(**trigger).start())
+        self._queries.append(query)
+        if available_now:
+            self._available_now.add(id(query))
+        return query
+
+    def drain(self, query, *, expected_rows: int | None = None,
+              stop_at_count: bool = False, min_batches: int = 0) -> int:
+        """Drain a query this owner started, within
+        ``GATE_TIMEOUT_SECONDS``, and return its data-batch count: an
+        ``availableNow`` query by waiting for it to terminate
+        (:func:`await_available_now`), a processing-time one through
+        :func:`drain_available` with ``expected_rows`` and
+        ``stop_at_count``. Fewer than ``min_batches`` data batches raise
+        an ``AssertionError`` naming the gate."""
+        if id(query) in self._available_now:
+            await_available_now(query, self.label, GATE_TIMEOUT_SECONDS)
+            batches = sum(1 for p in query.recentProgress
+                          if p["numInputRows"] > 0)
+        else:
+            batches = drain_available(query,
+                                      timeout_seconds=GATE_TIMEOUT_SECONDS,
+                                      expected_rows=expected_rows,
+                                      stop_at_count=stop_at_count)
+        if batches < min_batches:
+            raise AssertionError(
+                f"{self.label}: backlog drained in {batches} data batches; "
+                f"the multi-batch gate requires >= {min_batches}")
+        return batches
+
+    def close(self) -> None:
+        """Stop every started query, then remove every checkpoint."""
+        for query in self._queries:
+            stop_query(query)
+        for ckpt in self._names:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+@contextmanager
+def streams(label: str):
+    """A :class:`StreamOwner` for the ``with`` block: on exit, normal or
+    not, it stops the queries it started and then removes their
+    checkpoints."""
+    owner = StreamOwner(label)
+    try:
+        yield owner
+    finally:
+        owner.close()
+
+
+def run(writer, label: str, *, available_now: bool = False, **drain):
+    """Start ``writer`` on a fresh owned checkpoint, drain it
+    (:meth:`StreamOwner.drain` keywords) and release it. Returns the
+    stopped query: ``.name`` names a memory sink's table,
+    ``.recentProgress`` holds its progress events."""
+    with streams(label) as owner:
+        query = owner.start(writer, available_now=available_now)
+        owner.drain(query, **drain)
+    return query
+
+
 def kill_resume(start, ckpt: str, total_rows: int, label: str) -> None:
     """Run the three-phase kill/resume protocol over one checkpoint.
 
@@ -245,8 +365,7 @@ def kill_resume(start, ckpt: str, total_rows: int, label: str) -> None:
     query = None
     try:
         query = start({"availableNow": True}, rate_limited=True)
-        if not query.awaitTermination(120):
-            raise TimeoutError(f"{label} phase 1 did not terminate")
+        await_available_now(query, f"{label} phase 1", 120)
         query = start({"processingTime": "0 seconds"}, rate_limited=True)
         await_progress(query, f"{label} phase 2")
         query.stop()                        # the mid-backlog kill

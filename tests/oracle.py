@@ -52,34 +52,50 @@ def _norm(v):
     return v
 
 
-def compare(spark_df, con, sql: str, float_exact: bool = True):
-    """Assert Spark result == DuckDB result (sorted columns + rows)."""
+def diff(spark_df, con, sql: str, float_exact: bool = True) -> dict:
+    """Compare a Spark result with its DuckDB oracle without asserting.
+
+    Returns ``schema_match`` (same lower-cased column names),
+    ``rows_match`` (same row count), ``hash_match`` (all three checks,
+    rows compared as sorted multisets of :func:`_norm` cells), the two
+    row counts and column lists, and up to 5 ``mismatches`` as
+    ``(index, spark_row, duck_row)``."""
     duck = con.sql(sql)
     duck_cols = [c.lower() for c in duck.columns]
     spark_cols = [c.lower() for c in spark_df.columns]
-    assert sorted(duck_cols) == sorted(spark_cols), (
-        f"column mismatch: spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
-
     s_rows = [tuple(_norm(r[c]) for c in sorted(spark_df.columns,
                                                 key=str.lower))
               for r in spark_df.collect()]
-    duck_rows_raw = duck.fetchall()
     order = [duck_cols.index(c) for c in sorted(duck_cols)]
-    d_rows = [tuple(_norm(r[i]) for i in order) for r in duck_rows_raw]
-
-    assert len(s_rows) == len(d_rows), (
-        f"row count mismatch: spark={len(s_rows)} duck={len(d_rows)}")
+    d_rows = [tuple(_norm(r[i]) for i in order) for r in duck.fetchall()]
 
     key = lambda t: tuple((x is None, str(type(x)), str(x)) for x in t)  # noqa: E731
-    s_sorted = sorted(s_rows, key=key)
-    d_sorted = sorted(d_rows, key=key)
     mismatches = []
-    for i, (s, d) in enumerate(zip(s_sorted, d_sorted)):
+    for i, (s, d) in enumerate(zip(sorted(s_rows, key=key),
+                                   sorted(d_rows, key=key))):
         if s != d and not _rows_close(s, d, float_exact):
             mismatches.append((i, s, d))
             if len(mismatches) >= 5:
                 break
-    assert not mismatches, f"value mismatches (spark vs duck): {mismatches}"
+    schema_match = sorted(duck_cols) == sorted(spark_cols)
+    rows_match = len(s_rows) == len(d_rows)
+    return {"schema_match": schema_match, "rows_match": rows_match,
+            "hash_match": schema_match and rows_match and not mismatches,
+            "spark_rows": len(s_rows), "oracle_rows": len(d_rows),
+            "spark_cols": sorted(spark_cols), "duck_cols": sorted(duck_cols),
+            "mismatches": mismatches}
+
+
+def compare(spark_df, con, sql: str, float_exact: bool = True):
+    """Assert Spark result == DuckDB result (sorted columns + rows)."""
+    r = diff(spark_df, con, sql, float_exact)
+    assert r["schema_match"], (
+        f"column mismatch: spark={r['spark_cols']} duck={r['duck_cols']}")
+    assert r["rows_match"], (
+        f"row count mismatch: spark={r['spark_rows']} "
+        f"duck={r['oracle_rows']}")
+    assert not r["mismatches"], (
+        f"value mismatches (spark vs duck): {r['mismatches']}")
 
 
 def _rows_close(s, d, float_exact: bool) -> bool:

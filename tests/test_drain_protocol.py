@@ -456,3 +456,127 @@ def test_await_progress_timeout_names_the_gate():
     with pytest.raises(TimeoutError, match=r"tail gate: no progress"):
         await_progress(_FakeRun([[]]), "tail gate", timeout_seconds=0.1,
                        data=False)
+
+
+# ------------------------------------------------- stream owner
+
+class _FakeWriter:
+    """A DataStreamWriter whose start() returns ``query``; the query
+    name, options and trigger it was given are kept in ``calls``."""
+
+    def __init__(self, query):
+        self.query = query
+        self.calls = {}
+
+    def queryName(self, name):
+        self.calls["name"] = name
+        return self
+
+    def option(self, key, value):
+        self.calls[key] = value
+        return self
+
+    def trigger(self, **kw):
+        self.calls["trigger"] = kw
+        return self
+
+    def start(self):
+        return self.query
+
+
+def _failing_drain(query, **kw):    # raises without stopping query
+    raise RuntimeError("boom")
+
+
+def test_owner_raise_during_drain_stops_query_and_removes_checkpoint(
+        monkeypatch):
+    import os
+
+    from spark_streaming_dis_plugin_spark.streaming import drain
+
+    monkeypatch.setattr(drain, "drain_available", _failing_drain)
+    q = _FakeRun([[]])
+    w = _FakeWriter(q)
+    with pytest.raises(RuntimeError, match="boom"):
+        drain.run(w, "gate", expected_rows=100)
+    assert q.stopped
+    assert not os.path.exists(w.calls["checkpointLocation"])
+    assert w.calls["trigger"] == {"processingTime": "0 seconds"}
+    assert w.calls["name"].startswith("gate_")
+
+
+def test_owner_stops_every_query_before_removing_any_checkpoint(
+        monkeypatch):
+    import os
+
+    from spark_streaming_dis_plugin_spark.streaming import drain
+
+    events = []
+
+    class _Logged(_FakeRun):
+        def stop(self):
+            super().stop()
+            events.append("stop")
+
+    real_rmtree = drain.shutil.rmtree
+
+    def rmtree(path, **kw):
+        events.append("rmtree")
+        real_rmtree(path, **kw)
+
+    monkeypatch.setattr(drain.shutil, "rmtree", rmtree)
+    monkeypatch.setattr(drain, "drain_available", _failing_drain)
+    writers = [_FakeWriter(_Logged([[]])), _FakeWriter(_Logged([[]]))]
+    with pytest.raises(RuntimeError, match="boom"):
+        with drain.streams("gate") as owner:
+            started = [owner.start(w) for w in writers]
+            owner.drain(started[0])
+    assert all(w.query.stopped for w in writers)
+    assert events == ["stop", "stop", "rmtree", "rmtree"]
+    assert not any(os.path.exists(w.calls["checkpointLocation"])
+                   for w in writers)
+    assert writers[0].calls["name"] != writers[1].calls["name"]
+
+
+def test_owner_min_batches_error_names_the_gate():
+    import os
+
+    from spark_streaming_dis_plugin_spark.streaming import drain
+
+    q = _FakeRun([[_p(0, 40, 0.0), _p(1, 0, 1.0), _p(2, 0, 5.0)]])
+    w = _FakeWriter(q)
+    with pytest.raises(AssertionError,
+                       match=r"ann_ingest: backlog drained in 1 data "
+                             r"batches; the multi-batch gate requires >= 3"):
+        drain.run(w, "ann_ingest", min_batches=3)
+    assert q.stopped
+    assert not os.path.exists(w.calls["checkpointLocation"])
+
+
+def test_owner_available_now_that_does_not_terminate_times_out():
+    import os
+
+    from spark_streaming_dis_plugin_spark.streaming import drain
+
+    q = _FakeRun([[]])
+    w = _FakeWriter(q)
+    with pytest.raises(TimeoutError, match=r"gate: availableNow run"):
+        drain.run(w, "gate", available_now=True)
+    assert q.stopped
+    assert w.calls["trigger"] == {"availableNow": True}
+    assert not os.path.exists(w.calls["checkpointLocation"])
+
+
+def test_owner_restart_on_a_checkpoint_keeps_its_query_name():
+    from spark_streaming_dis_plugin_spark.streaming import drain
+
+    first = _FakeRun([[_p(0, 40, 0.0)]], terminates=True)
+    writers = [_FakeWriter(first), _FakeWriter(_FakeRun([[]]))]
+    with drain.streams("gate") as owner:
+        ckpt = owner.checkpoint()
+        q = owner.start(writers[0], available_now=True, ckpt=ckpt)
+        assert owner.drain(q) == 1
+        owner.start(writers[1], ckpt=ckpt)
+    assert writers[0].calls["name"] == writers[1].calls["name"]
+    assert writers[1].calls["checkpointLocation"] == ckpt
+    assert writers[1].query.stopped

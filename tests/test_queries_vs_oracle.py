@@ -4,6 +4,8 @@ gate (which runs at sf0.01)."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 
 from spark_streaming_dis_plugin_spark.plans.registry import all_queries
@@ -112,3 +114,41 @@ def test_lsh_fast_matches_portable_pairs(spark, sf_dir):
     slow = QUERIES["dedup_minhash_lsh"].fn(spark, sf_dir)
     key = lambda r: (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
     assert sorted(map(key, fast.collect())) == sorted(map(key, slow.collect()))
+
+
+class _Rows:
+    """A collected result with the ``columns`` / ``collect()`` surface the
+    comparator reads."""
+
+    def __init__(self, columns, rows):
+        self.columns = columns
+        self._rows = [dict(zip(columns, r)) for r in rows]
+
+    def collect(self):
+        return self._rows
+
+
+@pytest.mark.parametrize("spark_rows,sql", [
+    ([(999,)], "SELECT 999.0::DOUBLE AS v"),
+    ([(Decimal("1"),)], "SELECT 1.0::DOUBLE AS v"),
+    ([(None,)], "SELECT 'None' AS v"),
+    ([(1,), (1,)], "SELECT 1::BIGINT AS v"),
+])
+def test_comparator_is_type_strict(spark_rows, sql):
+    """The comparator every oracle check shares (tests, query_mix,
+    tools/drive_contract.py): a BIGINT is not a DOUBLE, a DECIMAL is
+    not a DOUBLE, a null is not the string 'None', and a row-count
+    difference is a mismatch."""
+    import duckdb
+
+    from .oracle import diff
+
+    con = duckdb.connect()
+    r = diff(_Rows(["v"], spark_rows), con, sql)
+    assert r["schema_match"] and not r["hash_match"]
+    assert r["rows_match"] == (len(spark_rows) == 1)
+    with pytest.raises(AssertionError):
+        compare(_Rows(["v"], spark_rows), con, sql)
+    # the same value on both sides matches
+    assert diff(_Rows(["v"], [(1,)]), con, "SELECT 1::BIGINT AS v")[
+        "hash_match"]

@@ -20,13 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_CLK = os.sysconf("SC_CLK_TCK")
-
-
-def _steal() -> float:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    return int(parts[7]) / _CLK if len(parts) > 7 else 0.0
+from bench import _cpu_steal_sec
 
 
 def main() -> None:
@@ -55,9 +49,10 @@ def main() -> None:
         samples, steals = [], []
         for i in range(args.iters + 1):
             spark.catalog.clearCache()
-            s0, t0 = _steal(), time.perf_counter()
+            s0, t0 = _cpu_steal_sec() or 0.0, time.perf_counter()
             fn(spark, args.sf).count()
-            dt, ds = time.perf_counter() - t0, _steal() - s0
+            dt = time.perf_counter() - t0
+            ds = (_cpu_steal_sec() or 0.0) - s0
             if i > 0:
                 samples.append(round(dt, 3))
                 steals.append(round(ds, 2))

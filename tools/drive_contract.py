@@ -1,6 +1,7 @@
 """Drive __spark_entry__ exactly as the verify driver does: fresh session,
 entry() smoke, then every queries()[name] vs oracle_sql()[name] via DuckDB
-at sf0.01 (row count + column names + order-insensitive values).
+at sf0.01 (row count + column names + order-insensitive values), through
+the type-strict comparator of tests/oracle.py (``diff``).
 
 Usage:
     python tools/drive_contract.py [TZ] [SF_DIR] [--json OUT.json]
@@ -15,7 +16,7 @@ the sweep must not paper over a crashing gate.
 The tool imports the package and ``__spark_entry__`` from the checkout
 it sits in, so a second checkout's copy checks that checkout's code.
 """
-import json, os, sys, math, datetime, decimal
+import json, os, sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 os.chdir(REPO)
@@ -64,19 +65,9 @@ n = df.count()
 print(f"ENTRY: rows={n} schema={df.columns}", flush=True)
 assert n > 0
 
-import duckdb
+from tests.oracle import diff, duck_connection
 SF = argv[1] if len(argv) > 1 else "/root/testdata/sf0.01"
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-def norm(v):
-    # Decimal stays type-distinct (driver's hash separates Decimal from
-    # int/float — verified by the r2 split/pack hash failures).
-    if isinstance(v, decimal.Decimal): return f"dec:{v}"
-    if isinstance(v, float): return "nan" if math.isnan(v) else v
-    if isinstance(v, (datetime.datetime, datetime.date)): return v.isoformat()
-    return v
+con = duck_connection(SF)
 
 qs, oracles = E.queries(), E.oracle_sql()
 if only is not None:
@@ -101,17 +92,10 @@ for name in sorted(qs):
     # MISMATCHES are never retried — a wrong answer is deterministic
     # evidence, not a flake.
     err_attempt1 = None
-    srows = drows = scols = dcols = None
+    r = None
     for attempt in (1, 2):
         try:
-            sdf = qs[name](spark, SF)
-            scols = sorted(c.lower() for c in sdf.columns)
-            srows = sorted([tuple(str(norm(r[c])) for c in sorted(sdf.columns, key=str.lower))
-                            for r in sdf.collect()])
-            d = con.sql(oracles[name])
-            dcols = [c.lower() for c in d.columns]
-            idx = [dcols.index(c) for c in sorted(dcols)]
-            drows = sorted([tuple(str(norm(r[i])) for i in idx) for r in d.fetchall()])
+            r = diff(qs[name](spark, SF), con, oracles[name])
             break
         except Exception as exc:  # crashing gate = failure, recorded not hidden
             msg = f"{type(exc).__name__}: {exc}"[:500]
@@ -125,24 +109,22 @@ for name in sorted(qs):
                             "hash_match": False, "spark_rows": None,
                             "oracle_rows": None, "err": msg,
                             "err_attempt1": err_attempt1, "attempts": 2}
-    if srows is None:
+    if r is None:
         continue
-    schema_match = scols == sorted(dcols)
-    rows_match = len(srows) == len(drows)
-    hash_match = schema_match and srows == drows
-    status = "OK" if hash_match else "MISMATCH"
+    status = "OK" if r["hash_match"] else "MISMATCH"
     if status == "OK": ok += 1
     else:
         bad += 1
-        print(f"  {status} {name}: cols {schema_match} rows {len(srows)}/{len(drows)}")
-        for a, b in list(zip(srows, drows))[:3]:
-            if a != b: print("    spark:", a, "\n    duck :", b)
-    print(f"  {name}: {status} ({len(srows)} rows)", flush=True)
-    report[name] = {"rows_match": rows_match, "schema_match": schema_match,
-                    "hash_match": hash_match, "spark_rows": len(srows),
-                    "oracle_rows": len(drows), "err": None,
-                    **({"err_attempt1": err_attempt1, "attempts": 2,
-                        "flaky": True} if err_attempt1 else {})}
+        print(f"  {status} {name}: cols {r['schema_match']} rows {r['spark_rows']}/{r['oracle_rows']}")
+        for _, a, b in r["mismatches"][:3]:
+            print("    spark:", a, "\n    duck :", b)
+    print(f"  {name}: {status} ({r['spark_rows']} rows)", flush=True)
+    report[name] = {k: r[k] for k in ("rows_match", "schema_match",
+                                      "hash_match", "spark_rows",
+                                      "oracle_rows")}
+    report[name]["err"] = None
+    if err_attempt1:
+        report[name].update(err_attempt1=err_attempt1, attempts=2, flaky=True)
 flaky = sorted(n for n, r in report.items() if r.get("flaky"))
 rows_only_n = sum(1 for n in qs if n not in oracles)
 print(f"RESULT: {ok} ok, {bad} mismatched, {rows_only_n} rows-only"

@@ -7,7 +7,7 @@ JVM-spawned workers through interpreter site processing instead.
 
 The harness scrubs any pbvendor path out of PYTHONPATH first so the test
 cannot pass through the env-var channel, then runs both declared TWS
-rows against their DuckDB oracles with the driver comparator.
+rows against their DuckDB oracles with the comparator of tests/oracle.py.
 
 Usage: python tools/tws_driver_sim.py  (exit 0 = both rows OK)
 """
@@ -18,7 +18,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CHILD = r"""
-import os, sys, math, datetime, decimal
+import os, sys
 
 # 1. Session FIRST — package not yet imported, PYTHONPATH scrubbed.
 from pyspark.sql import SparkSession
@@ -32,36 +32,17 @@ assert "spark_streaming_dis_plugin_spark" not in sys.modules
 sys.path.insert(0, %(repo)r)
 os.chdir(%(repo)r)
 import __spark_entry__ as E
+from tests.oracle import diff, duck_connection
 
-import duckdb
 SF = "/root/testdata/sf0.01"
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders",
-          "lineitem","events","documents","embeddings"]:
-    con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-def norm(v):
-    if isinstance(v, decimal.Decimal): return f"dec:{v}"
-    if isinstance(v, float): return "nan" if math.isnan(v) else v
-    if isinstance(v, (datetime.datetime, datetime.date)): return v.isoformat()
-    return v
-
+con = duck_connection(SF)
 qs, oracles = E.queries(), E.oracle_sql()
 bad = 0
 for name in ("dis_state_totals_tws_streamed", "dis_state_timers_tws_streamed"):
-    sdf = qs[name](spark, SF)
-    scols = sorted(c.lower() for c in sdf.columns)
-    srows = sorted(tuple(str(norm(r[c]))
-                         for c in sorted(sdf.columns, key=str.lower))
-                   for r in sdf.collect())
-    d = con.sql(oracles[name])
-    dcols = [c.lower() for c in d.columns]
-    idx = [dcols.index(c) for c in sorted(dcols)]
-    drows = sorted(tuple(str(norm(r[i])) for i in idx) for r in d.fetchall())
-    ok = scols == sorted(dcols) and srows == drows
-    print(f"  {name}: {'OK' if ok else 'MISMATCH'} ({len(srows)} rows)",
-          flush=True)
-    if not ok:
+    r = diff(qs[name](spark, SF), con, oracles[name])
+    print(f"  {name}: {'OK' if r['hash_match'] else 'MISMATCH'} "
+          f"({r['spark_rows']} rows)", flush=True)
+    if not r["hash_match"]:
         bad += 1
 spark.stop()
 sys.exit(1 if bad else 0)
