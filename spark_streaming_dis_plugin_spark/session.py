@@ -15,6 +15,19 @@ started outside the checkout fails every Python task with "No module
 named 'spark_streaming_dis_plugin_spark'". Both are static settings of a
 new SparkContext: a session built before this package is imported — the
 session-first ``__spark_entry__.py`` shape — runs pyspark's own daemon.
+
+Spark keeps the classes whole-stage codegen compiles in one JVM-wide
+cache of ``spark.sql.codegen.cache.maxEntries`` entries, 100 by default.
+One cycle of the seven ``perfbench`` ``query_mix`` queries needs 211
+distinct classes, and the 48 bench rows at sf0.001 need 1,101, so at 100
+entries every cycle evicted its own classes and each warm query
+recompiled 5-55 of them. ``CODEGEN_CACHE_ENTRIES`` holds both working
+sets with about 4x headroom over the larger one: a warm ``query_mix``
+pass then compiles nothing, and the 1,101 classes added about 9 MB of
+metaspace. The cache is sized once per JVM, at its first code
+generation, from the conf of the session that runs it, so the sessions
+this module does not build — the session-first ``__spark_entry__.py``
+shape and ``tools/drive_contract.py`` — keep Spark's default of 100.
 """
 
 from __future__ import annotations
@@ -25,6 +38,7 @@ from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _worker_path() -> str:
@@ -67,5 +81,6 @@ def get_spark(app_name: str = "spark_streaming_dis_plugin_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config(_WORKER_PATH, _worker_path())
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )

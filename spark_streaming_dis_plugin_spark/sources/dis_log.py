@@ -604,9 +604,20 @@ def _newest_mtime(path: str) -> float:
     return newest
 
 
+def _segment_schema():
+    import pyarrow as pa
+
+    return pa.schema([("offset", pa.int64()), ("key", pa.string()),
+                      ("value", pa.string()),
+                      ("timestamp", pa.timestamp("us"))])
+
+
 def _write_segment(table, path: str) -> None:
-    """Write a segment with microsecond timestamps — pandas produces
-    nanosecond columns, which Spark's parquet reader rejects.
+    """Write a segment in the one segment schema: offset int64, key and
+    value string, timestamp microseconds. Pandas produces nanosecond
+    columns, which Spark's parquet reader rejects, and infers ``null``
+    for an all-None column, which Spark reads as an int column that no
+    string-keyed segment can be read together with.
 
     ATOMIC: bytes land under a ``.tmp-<hex>`` suffix that the anchored
     ``_SEG_RE`` (``\\.parquet$``) can never match, then os.replace makes
@@ -616,14 +627,10 @@ def _write_segment(table, path: str) -> None:
     FILENAME (which under a direct write exists before the bytes do),
     so the planner could schedule offsets whose parquet an executor then
     reads torn — the same cross-process class as the metadata.json race."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    fields = [pa.field(f.name, pa.timestamp("us"))
-              if pa.types.is_timestamp(f.type) else f
-              for f in table.schema]
     tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-    pq.write_table(table.cast(pa.schema(fields)), tmp)
+    pq.write_table(table.cast(_segment_schema()), tmp)
     os.replace(tmp, path)
 
 

@@ -10,6 +10,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "timeout(seconds): fail the test after this many seconds; the bound "
+        "is enforced only where the pytest-timeout plugin is installed")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from spark_streaming_dis_plugin_spark.session import get_spark

@@ -109,6 +109,27 @@ def test_producer_append_assigns_offsets(tmp_path):
     assert latest == {0: 4, 1: 2}  # offsets continue monotonically
 
 
+def test_all_null_key_append_reads_with_keyed_segments(spark, tmp_path):
+    """An append whose keys are all None still writes a string ``key``
+    column: pandas alone would infer a null-typed column, which Spark
+    reads as int and cannot read in one scan with a keyed segment."""
+    import pandas as pd
+    from pyspark.sql.types import StringType
+
+    log = DisLog(str(tmp_path), "nullkey").create(1)
+    ts = pd.to_datetime(["2024-01-01"] * 2)
+    log.append(pd.DataFrame({"partition": [0, 0], "key": [None, None],
+                             "value": ["a", "b"], "timestamp": ts}))
+    log.append(pd.DataFrame({"partition": [0, 0], "key": ["k", None],
+                             "value": ["c", "d"], "timestamp": ts}))
+    null_only = dis_read(spark, log, '{"0":[0,2]}')
+    assert null_only.schema["key"].dataType == StringType()
+    both = dis_read(spark, log, '{"0":[0,4]}')
+    assert sorted((r["offset"], r["key"], r["value"])
+                  for r in both.collect()) == [
+        (0, None, "a"), (1, None, "b"), (2, "k", "c"), (3, None, "d")]
+
+
 # ------------------------------------------- compacted / gappy logs
 
 def _mklog(tmp_path, name, rows_per_part=60):
