@@ -369,10 +369,12 @@ class DisLog:
 
         The same gate applies to every entry directly under
         ``<stream>/_staging/``: the ``stage-*.parquet`` files of a
-        crashed ``format("dis")`` task or driver and the per-txn
-        directories of a crashed foreachBatch sink. A directory's age is
-        that of the newest file in it, so a sink still writing its
-        batch is left alone."""
+        crashed ``format("dis")`` task or driver, and the per-txn
+        directories that a foreachBatch sink crashed mid-batch left
+        behind when it still staged its batches there (it now commits
+        from a driver-side collect and stages nothing). A directory's
+        age is that of the newest file in it, so a writer still filling
+        it is left alone."""
         cutoff = time.time() - min_age_seconds
         removed = 0
         if not os.path.isdir(self.stream_dir):
@@ -641,9 +643,11 @@ def commit_assigned(log: DisLog, chunks, txn: str | None = None,
     writes) and ``DisForeachBatchSink``.
 
     ``chunks`` yields ``(partition, table)`` pairs of (key, value,
-    timestamp) rows in commit order; it is consumed lazily, so a caller
-    that reads its staged files inside the generator bounds driver
-    memory by one staged file, never the batch. Each chunk is appended
+    timestamp) rows in commit order; it is consumed lazily, so
+    ``DisWriter``, which reads its staged files inside the generator,
+    bounds driver memory by one staged file, never the batch.
+    ``DisForeachBatchSink`` collects its whole micro-batch first and
+    holds it while the chunks are written. Each chunk is appended
     at its partition's tail as txn-tagged segments (cut every
     ``segment_rows`` rows), each written atomically; rows keep their
     order, so a partition's offsets follow chunk order. The txn lands in

@@ -209,11 +209,11 @@ def test_foreach_batch_sink_idempotent(spark, log, tmp_path):
     assert sum(out.latest_offsets().values()) == 60
 
 
-def test_writer_stages_on_executors_no_driver_collect(spark, log, tmp_path):
-    """The write path must not funnel rows through the driver: executors
-    stage parquet files under _staging/, and commit only renames/rewrites
-    file-at-a-time. Asserted by hooking DisLog.append (the old driver-side
-    path) to fail, and by checking segments carry the txn tag."""
+def test_sink_commits_through_commit_assigned(spark, log, tmp_path):
+    """The sink lands its rows only through ``commit_assigned``: hooking
+    ``DisLog.append`` (the untagged driver-side append) to fail leaves the
+    batch committed, every segment carries the txn tag, the ledger
+    records the txn, and nothing is left under ``_staging/``."""
     from spark_streaming_dis_plugin_spark.sources.dis_log import DisLog as DL
 
     out = DL(str(tmp_path / "nodriver"), "nd").create(2)
@@ -238,6 +238,33 @@ def test_writer_stages_on_executors_no_driver_collect(spark, log, tmp_path):
     import os
     stage = os.path.join(out.stream_dir, "_staging")
     assert not os.path.isdir(stage) or not os.listdir(stage)
+
+
+def test_sink_creates_no_staging_dir(spark, log, tmp_path):
+    """A sink call commits from the collected batch and never creates
+    ``<stream>/_staging/``."""
+    import os
+
+    out = DisLog(str(tmp_path / "nostage"), "ns").create(2)
+    batch = (_dis(spark, log).option("offsetRanges", '{"0":[0,20]}').load()
+             .select((F.col("partition") % 2).cast("int").alias("partition"),
+                     "key", "value", "timestamp"))
+    DisForeachBatchSink(out, "nsq")(batch, 0)
+    assert sum(out.latest_offsets().values()) == 20
+    assert not os.path.exists(os.path.join(out.stream_dir, "_staging"))
+
+
+def test_sink_empty_batch_records_txn_without_segments(spark, log, tmp_path):
+    """An empty micro-batch still commits its txn, so a replay skips it,
+    and writes no segment."""
+    out = DisLog(str(tmp_path / "empty"), "em").create(2)
+    batch = (_dis(spark, log).option("offsetRanges", '{"0":[0,20]}').load()
+             .where(F.lit(False))
+             .select("partition", "key", "value", "timestamp"))
+    DisForeachBatchSink(out, "emq")(batch, 0)
+    assert "emq_b0" in out.committed_txns()
+    assert not [s for p in out.partitions() for s in out.segment_infos(p)]
+    assert sum(out.latest_offsets().values()) == 0
 
 
 def test_writer_crash_recovery_rolls_back_uncommitted_txn(spark, log, tmp_path):
@@ -354,8 +381,8 @@ def _log_rows(log):
 
 @pytest.mark.parametrize("ts_type", ["timestamp_ntz", "timestamp"])
 def test_sink_segments_match_dis_writer(spark, tmp_path, ts_type):
-    """Fidelity: for the same batch, the foreachBatch sink (Spark parquet
-    staging + driver commit) writes exactly the segments a
+    """Fidelity: for the same batch, the foreachBatch sink (Arrow collect
+    + driver commit) writes exactly the segments a
     ``format("dis")`` write does — key, value, timestamp, per-partition
     row order and segment spans — for an NTZ and an LTZ timestamp
     column under a non-UTC session timezone, with rows across several
